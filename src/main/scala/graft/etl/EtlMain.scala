@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
   *   runMain graft.etl.EtlMain stream <inboxDir> <outDir> <archiveDir> <checkpointDir>
   * }}}
   *
-  * `batch` processes every landed JSON page in `inDir` once; `stream` drains
-  * the inbox with Trigger.AvailableNow (one micro-batch per file) and
-  * archives consumed inputs — the two invocation shapes of the reference's
-  * serverless transform.
+  * `batch` processes every landed JSON page in `inDir` once, deduplicating
+  * the dims across all of them; `stream` drains the inbox with
+  * Trigger.AvailableNow (one micro-batch admitting every landed page, each
+  * page's dims deduplicated on its own) and archives consumed inputs — the
+  * two invocation shapes of the reference's serverless transform.
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Batch entry for the playlist ETL: landed JSON page(s) in → the 3-table
   * star schema out as CSV-with-header (the reference's output contract,
@@ -28,23 +29,25 @@ object PipelineBatch {
     * (songs, artists, albums) so callers can assert/log.
     */
   def run(spark: SparkSession, inDir: String, outDir: String, runId: String): (Long, Long, Long) = {
-    val raw = readLanding(spark, inDir)
-    val (songs, artists, albums) = SpotifyTransform(raw)
+    // persist the explode so the landed JSON is parsed once for all three
+    // tables, not once per write
+    val ex = SpotifyTransform.exploded(readLanding(spark, inDir)).persist()
+    try {
+      val (songs, artists, albums) = SpotifyTransform.tables(ex)
 
-    // persist around write+count so each table's transform (and the input
-    // JSON parse) runs once, not once per action; counts then agree with
-    // exactly what was written even if the landing dir changes mid-run
-    def write(df: DataFrame, table: String): Long = {
-      df.persist()
-      try {
-        df.write
+      // the count rides the write job as an observation, so it is exactly
+      // the rows written and costs no job of its own
+      def write(df: DataFrame, table: String): Long = {
+        val written = Observation()
+        df.observe(written, count(lit(1)).as("rows"))
+          .write
           .mode(SaveMode.Overwrite)
           .option("header", value = true)
           .csv(s"$outDir/${table}_data/run=$runId")
-        df.count()
-      } finally df.unpersist()
-    }
+        written.get("rows").asInstanceOf[Long]
+      }
 
-    (write(songs, "song"), write(artists, "artist"), write(albums, "album"))
+      (write(songs, "song"), write(artists, "artist"), write(albums, "album"))
+    } finally ex.unpersist()
   }
 }

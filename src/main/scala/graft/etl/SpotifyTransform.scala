@@ -55,8 +55,10 @@ object SpotifyTransform {
     // yield null, not an ANSI INVALID_ARRAY_INDEX error killing the batch
     try_element_at(col("item.track.artists"), lit(1)).getField("id").as("artist_id"))
 
-  /** Artist dim: primary artist of each item, deduped keep-first. */
-  def artists(ex: DataFrame): DataFrame =
+  /** Artist dim: primary artist of each item, deduped keep-first (within
+    * each landed page when `perPage`, see [[tables]]).
+    */
+  def artists(ex: DataFrame, perPage: Boolean = false): DataFrame =
     keepFirst(
       ex.select(
         col("__src"), col("pos"),
@@ -64,10 +66,12 @@ object SpotifyTransform {
         try_element_at(col("item.track.artists"), lit(1)).getField("name").as("name"),
         try_element_at(col("item.track.artists"), lit(1)).getField("external_urls")
           .getField("spotify").as("url")),
-      key = "artist_id")
+      "artist_id", perPage)
 
-  /** Album dim: deduped keep-first, release_date parsed multi-precision. */
-  def albums(ex: DataFrame): DataFrame =
+  /** Album dim: deduped keep-first (within each landed page when
+    * `perPage`), release_date parsed multi-precision.
+    */
+  def albums(ex: DataFrame, perPage: Boolean = false): DataFrame =
     keepFirst(
       ex.select(
         col("__src"), col("pos"),
@@ -76,7 +80,7 @@ object SpotifyTransform {
         Dates.parseReleaseDate(col("item.track.album.release_date")).as("release_date"),
         col("item.track.album.total_tracks").as("total_tracks"),
         col("item.track.album.external_urls.spotify").as("url")),
-      key = "album_id")
+      "album_id", perPage)
 
   /** Deterministic keep-first-occurrence dedup: the distributed equivalent of
     * pandas `drop_duplicates(keep='first')` on a frame that has (`__src`,
@@ -86,19 +90,31 @@ object SpotifyTransform {
     * across runs (see [[exploded]] for the ordering contract). Shuffles by
     * `key` only; no global sort.
     */
-  def keepFirst(df: DataFrame, key: String): DataFrame = {
+  def keepFirst(df: DataFrame, key: String): DataFrame = keepFirst(df, key, perPage = false)
+
+  /** [[keepFirst]] by `key`, or by (`__src`, `key`) when `perPage`, so that
+    * each landed page is deduplicated on its own.
+    */
+  private def keepFirst(df: DataFrame, key: String, perPage: Boolean): DataFrame = {
     val ord =
       if (df.columns.contains("__src")) Seq(col("__src"), col("pos"))
       else Seq(col("pos")) // caller-supplied frames with a total `pos` order
-    val w = Window.partitionBy(col(key)).orderBy(ord: _*)
+    val part = if (perPage) Seq(col("__src"), col(key)) else Seq(col(key))
+    val w = Window.partitionBy(part: _*).orderBy(ord: _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__src", "pos")
   }
 
+  /** The three output tables of an [[exploded]] frame. `perPage` sets the
+    * dim dedup scope: `false` (batch) keeps the first occurrence across
+    * every page read; `true` (stream) dedups each landed page on its own,
+    * as the reference's per-blob transform does, however many pages one
+    * micro-batch admits.
+    */
+  def tables(ex: DataFrame, perPage: Boolean = false): (DataFrame, DataFrame, DataFrame) =
+    (songs(ex), artists(ex, perPage), albums(ex, perPage))
+
   /** Run the full transform: raw playlist page(s) → (songs, artists, albums). */
-  def apply(raw: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val ex = exploded(raw)
-    (songs(ex), artists(ex), albums(ex))
-  }
+  def apply(raw: DataFrame): (DataFrame, DataFrame, DataFrame) = tables(exploded(raw))
 }

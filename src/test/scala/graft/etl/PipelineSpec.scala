@@ -1,11 +1,17 @@
 package graft.etl
 
 import graft.SparkSpec
+import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.Comparator
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.{FSDataInputStream, RawLocalFileSystem, Path => HPath}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline tests: batch (json → 3 CSVs) and streaming
-  * (inbox → per-batch outputs, source files archived).
+  * (inbox → per-batch outputs, source files archived), plus the stream's
+  * admission rule, the dedup scope of each path and JSON opens per page.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -92,4 +98,104 @@ class PipelineSpec extends SparkSpec {
       assert(archivedCount() >= 1)
     } finally q.stop()
   }
+
+  private def jsonFiles(dir: Path): Seq[String] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq.sorted
+    finally s.close()
+  }
+
+  /** Ids of the micro-batches with a commit-log entry. */
+  private def committed(ckpt: Path): Seq[String] = {
+    val s = Files.list(ckpt.resolve("commits"))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.forall(_.isDigit)).toSeq.sorted
+    finally s.close()
+  }
+
+  /** One-item playlist page whose artist `ar` and album `al` carry `tag`. */
+  private def page(track: String, tag: String): String =
+    s"""{"items":[{"added_at":"2023-01-01T00:00:00Z","track":{"id":"$track","name":"T",
+       |"duration_ms":1,"popularity":1,"external_urls":{"spotify":"u"},
+       |"album":{"id":"al","name":"album $tag","release_date":"2020","total_tracks":1,
+       |"external_urls":{"spotify":"u"}},
+       |"artists":[{"id":"ar","name":"artist $tag","external_urls":{"spotify":"u"}}]}}]}"""
+      .stripMargin.replace("\n", "")
+
+  test("AvailableNow drains a 3-page backlog in one micro-batch and empties the inbox") {
+    val inbox = tmpDir("graft-backlog")
+    val out = tmpDir("graft-backlog-out")
+    val archive = tmpDir("graft-backlog-archive")
+    val ckpt = tmpDir("graft-backlog-ckpt")
+    Seq("a", "b", "c").foreach(n =>
+      Files.copy(java.nio.file.Paths.get(fixture), inbox.resolve(s"spotify_raw_$n.json")))
+
+    PipelineStream.start(spark, inbox.toString, out.toString, archive.toString, ckpt.toString)
+      .awaitTermination()
+    assert(committed(ckpt) === Seq("0"))
+    assert(spark.read.option("header", true).csv(s"$out/song_data/run=0").count() === 15)
+    assert(jsonFiles(inbox).isEmpty)
+    assert(jsonFiles(archive) === Seq("spotify_raw_a.json", "spotify_raw_b.json", "spotify_raw_c.json"))
+  }
+
+  test("stream dedups the dims of each page on its own; batch keeps the first page's row") {
+    val in = tmpDir("graft-scope")
+    Files.writeString(in.resolve("page_1.json"), page("t1", "one"))
+    Files.writeString(in.resolve("page_2.json"), page("t2", "two"))
+    val inbox = tmpDir("graft-scope-inbox")
+    jsonFiles(in).foreach(f => Files.copy(in.resolve(f), inbox.resolve(f)))
+    val batchOut = tmpDir("graft-scope-bout")
+    val streamOut = tmpDir("graft-scope-sout")
+    val ckpt = tmpDir("graft-scope-ckpt")
+
+    PipelineBatch.run(spark, in.toString, batchOut.toString, runId = "s")
+    PipelineStream.start(spark, inbox.toString, streamOut.toString,
+      tmpDir("graft-scope-archive").toString, ckpt.toString).awaitTermination()
+    assert(committed(ckpt) === Seq("0")) // both pages share one micro-batch
+
+    def names(dir: String): Seq[String] =
+      spark.read.option("header", true).csv(dir).collect().map(_.getAs[String]("name")).toSeq.sorted
+    assert(names(s"$streamOut/artist_data/run=0") === Seq("artist one", "artist two"))
+    assert(names(s"$streamOut/album_data/run=0") === Seq("album one", "album two"))
+    assert(names(s"$batchOut/artist_data/run=s") === Seq("artist one"))
+    assert(names(s"$batchOut/album_data/run=s") === Seq("album one"))
+  }
+
+  test("each landed page is opened once per batch run and once per stream micro-batch") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[OpenCountingFs].getName)
+    def counted(p: Path): String = s"countfs://$p"
+    val in = tmpDir("graft-opens")
+    val pages = Seq("p1.json", "p2.json", "p3.json")
+    pages.foreach(n => Files.copy(java.nio.file.Paths.get(fixture), in.resolve(n)))
+    val once = pages.map(_ -> 1).toMap
+
+    OpenCountingFs.opens.clear()
+    assert(PipelineBatch.run(spark, counted(in), tmpDir("graft-opens-out").toString, "o") ===
+      (15L, 3L, 4L))
+    assert(OpenCountingFs.counts === once)
+
+    OpenCountingFs.opens.clear()
+    val ckpt = tmpDir("graft-opens-ckpt")
+    PipelineStream.start(spark, counted(in), tmpDir("graft-opens-sout").toString,
+      counted(tmpDir("graft-opens-archive")), ckpt.toString).awaitTermination()
+    assert(committed(ckpt) === Seq("0"))
+    assert(OpenCountingFs.counts === once)
+  }
+}
+
+/** The local filesystem under the test-only `countfs` scheme, counting the
+  * opens of each `.json` file by name.
+  */
+class OpenCountingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.endsWith(".json"))
+      OpenCountingFs.opens.computeIfAbsent(f.getName, _ => new AtomicInteger()).incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  def counts: Map[String, Int] = opens.asScala.map { case (k, v) => k -> v.get }.toMap
 }
