@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * the dims across all of them; `stream` drains the inbox with
   * Trigger.AvailableNow (one micro-batch admitting every landed page, each
   * page's dims deduplicated on its own) and archives consumed inputs — the
-  * two invocation shapes of the reference's serverless transform.
+  * two invocation shapes of the reference's serverless transform. Either
+  * way, each run parses its JSON once, persists the parse, and writes the
+  * songs, artists and albums tables concurrently from it.
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {

@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, 
   *   drains a whole backlog in one micro-batch then stops (the
   *   serverless-invocation shape), while a `ProcessingTime` trickle still
   *   sees one page per trigger as pages arrive. The micro-batch's JSON is
-  *   parsed once and its three tables are written from that parse.
+  *   parsed once, persisted, and its three tables are written concurrently
+  *   from that one parse (see [[PipelineBatch.writeStar]]).
   * - Dim dedup stays per page, however many pages a micro-batch holds: each
   *   landed file is deduplicated on its own, as the reference's per-blob
   *   transform does (see [[SpotifyTransform.tables]]).
@@ -52,14 +53,8 @@ object PipelineStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ex = SpotifyTransform.exploded(batch).persist()
-        try {
-          val (songs, artists, albums) = SpotifyTransform.tables(ex, perPage = true)
-          def write(df: DataFrame, table: String): Unit =
-            df.write.mode("overwrite").option("header", value = true)
-              .csv(s"$outDir/${table}_data/run=$batchId")
-          write(songs, "song"); write(artists, "artist"); write(albums, "album")
-        } finally ex.unpersist()
+        PipelineBatch.writeStar(batch, perPage = true, outDir, batchId.toString)
+        ()
       }
       .start()
 

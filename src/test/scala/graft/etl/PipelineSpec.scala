@@ -4,14 +4,19 @@ import graft.SparkSpec
 import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.Comparator
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.{FSDataInputStream, RawLocalFileSystem, Path => HPath}
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.classic
+import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline tests: batch (json → 3 CSVs) and streaming
   * (inbox → per-batch outputs, source files archived), plus the stream's
-  * admission rule, the dedup scope of each path and JSON opens per page.
+  * admission rule, the dedup scope of each path, JSON opens per page, and
+  * the concurrent table writes: their job tags, job count and failure path.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -179,6 +184,72 @@ class PipelineSpec extends SparkSpec {
       counted(tmpDir("graft-opens-archive")), ckpt.toString).awaitTermination()
     assert(committed(ckpt) === Seq("0"))
     assert(OpenCountingFs.counts === once)
+  }
+
+  /** The `spark.job.tags` of each Spark job started while `f` ran. */
+  private def jobTags(f: => Unit): Seq[Set[String]] = {
+    val sc = spark.sparkContext
+    val tags = new ConcurrentLinkedQueue[Set[String]]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        tags.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet))
+    }
+    ListenerBusDrain(sc) // earlier jobs' events must not reach `l`
+    sc.addSparkListener(l)
+    try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
+    tags.asScala.toSeq
+  }
+
+  test("each run's write jobs carry the caller's job tag; a run takes at most 7 jobs") {
+    val in = tmpDir("graft-tags")
+    Seq("p1.json", "p2.json", "p3.json").foreach(n =>
+      Files.copy(java.nio.file.Paths.get(fixture), in.resolve(n)))
+    val sc = spark.sparkContext
+    val ours = Set("graft-etl-a", "graft-etl-b", "graft-etl-stream")
+    def tagged(tag: String)(f: => Unit): Seq[Set[String]] = {
+      sc.addJobTag(tag)
+      try jobTags(f) finally sc.removeJobTag(tag)
+    }
+
+    // two calls in a row: threads kept from the first call must not carry
+    // its tag into the second call's jobs
+    for (tag <- Seq("graft-etl-a", "graft-etl-b")) {
+      val jobs = tagged(tag) {
+        PipelineBatch.run(spark, in.toString, tmpDir("graft-tags-out").toString, tag)
+      }
+      assert(jobs.nonEmpty && jobs.forall(_.intersect(ours) == Set(tag)), jobs)
+      assert(jobs.size <= 7, s"jobs per batch run: ${jobs.size}")
+    }
+
+    val ckpt = tmpDir("graft-tags-ckpt")
+    val jobs = tagged("graft-etl-stream") {
+      PipelineStream.start(spark, in.toString, tmpDir("graft-tags-sout").toString,
+        tmpDir("graft-tags-archive").toString, ckpt.toString).awaitTermination()
+    }
+    assert(committed(ckpt) === Seq("0"))
+    assert(jobs.nonEmpty && jobs.forall(_.intersect(ours) == Set("graft-etl-stream")), jobs)
+    assert(jobs.size <= 7, s"jobs per micro-batch: ${jobs.size}")
+  }
+
+  test("a failing table write fails the run with no job left running and nothing persisted") {
+    val in = tmpDir("graft-fail")
+    Files.copy(java.nio.file.Paths.get(fixture), in.resolve("spotify_raw_1.json"))
+    val out = tmpDir("graft-fail-out")
+    Files.writeString(out.resolve("album_data"), "a file where the album table's directory goes")
+    val sc = spark.sparkContext
+    val sql = spark.asInstanceOf[classic.SparkSession].sharedState.statusStore
+    val persisted = sc.getPersistentRDDs.keySet
+    val earlier = sql.executionsList().map(_.executionId).toSet
+
+    intercept[Exception](PipelineBatch.run(spark, in.toString, out.toString, runId = "f"))
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    // no write of the run is still going after the throw
+    assert(sql.executionsList().filterNot(e => earlier(e.executionId)).forall(_.completionTime.nonEmpty))
+    assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
+    assert(SpotifyTransform.exploded(PipelineBatch.readLanding(spark, in.toString))
+      .storageLevel === StorageLevel.NONE)
   }
 }
 
