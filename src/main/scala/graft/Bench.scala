@@ -2,50 +2,31 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
-  /** 1-minute load stamp (shared definition, see ToolSession.loadAvg1):
+  /** 1-minute load stamp (shared definition, see GraftSession.loadAvg1):
     * written into both bench JSONs at start and end so a contended run is
     * self-identifying in the ARTIFACT (round 10's driver environment
     * inverted a perf conclusion with nothing in the file to flag it).
     */
-  private def loadAvg1: Double = graft.tools.ToolSession.loadAvg1
+  private def loadAvg1: Double = GraftSession.loadAvg1
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     // dev-only name-prefix filter (the driver never sets it): per-query
     // perf iteration without paying the whole suite; comma-separated
-    // prefixes select a set (the scale-rehearsal top-10 run)
+    // prefixes select a set
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
     def selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.forall(_.exists(name.startsWith)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); see graft.ops.Q.t
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // the EFFECTIVE core count, read back from the live context (not the
     // env echo): emitted in both JSONs so the artifact itself proves the
     // bench honored $SPARK_GRAFT_CPUS (the driver's scaling check flagged
     // `suspect_cpus_ignored` with nothing in the file to refute it)
     val effectiveCpus = spark.sparkContext.defaultParallelism
-    // Silence `WindowExec: No Partition Defined` — every unpartitioned
-    // window in the suite is a deliberately SHARD-BOUNDED two-phase
-    // prefix-sum frame (one row per shard/day/category; plan-asserted in
-    // WindowAuditSpec/AnalyticsSpec), so the warning is noise here, and
-    // a real global window would be caught by those specs, not this log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    graft.expr.GraftFunctions.register(spark)
     // Exhaust the plan through the built-in noop sink: unlike .count(),
     // every column is produced and shipped through the physical plan, so a
     // pure-projection query cannot collapse into a count-only scan.

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the playlist ETL.
   *
   * {{{
@@ -19,15 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     try args.toList match {
       case "batch" :: in :: out :: runId :: Nil =>
         val (s, ar, al) = PipelineBatch.run(spark, in, out, runId)

@@ -45,7 +45,7 @@ object Graph {
     * identical per-round plans also HIT the codegen cache, which an A/B
     * showed beats composing the rounds lazily (10.6 s vs 7.4 s at sf0.1:
     * lazy loses the cache and pays AQE replanning on the deep plan; the
-    * r11 `tools/LoopLab` sweep confirms cadence 1 < 2 < 5 at 5.3/6.1/7.6 s
+    * r11 checkpoint-cadence sweep measured cadence 1 < 2 < 5 at 5.3/6.1/7.6 s
     * and attributes 3.2 s of the total to edge PREP, ~0.4 s/round to the
     * loop itself). The
     * node count is collected ONCE (one row — the same driver-side stats

@@ -21,16 +21,16 @@ object Q {
     * TIMESTAMP so every query downstream sees one type:
     *
     *  - TIMESTAMP(NANOS): Spark only reads it via the
-    *    `spark.sql.legacy.parquet.nanosAsLong` flag (set in every session
-    *    this engine builds), which surfaces it as LONG nanos. Convert back
-    *    to micros with floor division — the same truncation DuckDB applies
-    *    when it reads nanos — so both engines see identical values.
+    *    `spark.sql.legacy.parquet.nanosAsLong` flag (pinned in
+    *    [[graft.GraftSession]]), which surfaces it as LONG nanos. Convert
+    *    back to micros with floor division — the same truncation DuckDB
+    *    applies when it reads nanos — so both engines see identical values.
     *  - timestamp[us] with isAdjustedToUTC=false (pandas-written): Spark
     *    4.x reads it as TIMESTAMP_NTZ, which time functions like
-    *    `unix_micros` reject. The session timezone is pinned to UTC
-    *    everywhere, so casting NTZ→TIMESTAMP reinterprets the naive value
-    *    as UTC — exactly how DuckDB treats a naive timestamp in epoch
-    *    arithmetic — and both engines again see identical values.
+    *    `unix_micros` reject. The session timezone is pinned to UTC (in
+    *    [[graft.GraftSession]]), so casting NTZ→TIMESTAMP reinterprets the
+    *    naive value as UTC — exactly how DuckDB treats a naive timestamp in
+    *    epoch arithmetic — and both engines again see identical values.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = readWithCachedSchema(spark, s"$dir/$name.parquet")
@@ -49,7 +49,7 @@ object Q {
   // input-table schema cache (r19, the genSchemaCache pattern applied to
   // the driver's test tables): every bare `spark.read.parquet` runs schema
   // INFERENCE as a one-task Spark job (~25-95 ms + its scheduling gap,
-  // measured by graft.tools.SchemaJobProbe), and the bench pays it once
+  // measured r19), and the bench pays it once
   // per table read per query — hundreds of times per sweep over files
   // that never change. The cache key is (path, length, mtime), so a
   // REGENERATED file re-probes and a hit is provably the same bytes; an
@@ -58,8 +58,8 @@ object Q {
   // unchanged file is deterministic). Only plain FILES are cached —
   // a directory's mtime does not track content rewrites. KNOWN
   // ASSUMPTION (the genSchemaCache contract, documented there): session
-  // config that shapes inference (`nanosAsLong`) is pinned identically
-  // in every session this engine builds.
+  // config that shapes inference (`nanosAsLong`) is the same in every
+  // session of the JVM — [[graft.GraftSession]] is the one place it is set.
   private val inputSchemaCache =
     new java.util.LinkedHashMap[(String, Long, Long),
         org.apache.spark.sql.types.StructType](64, 0.75f, true) {

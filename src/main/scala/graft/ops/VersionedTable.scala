@@ -1769,6 +1769,11 @@ object VersionedTable {
   // same root could serve a stale schema iff a fresh generation's
   // 8-hex-UUID dir name collided with a cached one from the old table
   // — practically unreachable, and a single-session engine by contract.
+  // The cached schema also bakes in the session read config that shapes
+  // it (`nanosAsLong`, the time zone): correct because every graft
+  // session is built by [[graft.GraftSession]], the one place both are
+  // pinned; a JVM mixing sessions with other values would need the cache
+  // keyed by them.
   private val genSchemaCache =
     new java.util.LinkedHashMap[(String, String), StructType](
         1024, 0.75f, true) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: print the formatted physical plan and wall time for one or
@@ -12,7 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val spark = ToolSession.local()
+    val spark = graft.GraftSession.local()
     names.foreach { name =>
       // time from CONSTRUCTION: iterative queries (e.g. connected
       // components) run jobs while the DataFrame is being built, and the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: sweep every registered query's physical plan and flag scale
@@ -23,7 +22,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = ToolSession.local()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-26s ${"exch"}%5s ${"bcast"}%5s ${"sorts"}%5s ${"gwin"}%5s  hazards")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-query job profiler: runs ONE named query (repeated
   * SPARK_GRAFT_BENCH_RUNS times, default 2 — first run warms codegen)
@@ -18,18 +17,8 @@ object QProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QProfile <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.GraftFunctions.register(spark)
+    val spark = graft.GraftSession.local()
 
     final case class JobRec(id: Int, site: String, start: Long,
         var end: Long = 0L)

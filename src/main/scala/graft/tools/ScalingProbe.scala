@@ -37,7 +37,7 @@ object ScalingProbe {
     "0.01" -> "/root/testdata/sf0.01",
     "0.1" -> "/root/testdata/sf0.1")
 
-  private def loadAvg1: Double = ToolSession.loadAvg1
+  private def loadAvg1: Double = graft.GraftSession.loadAvg1
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SCALING_CURVE.json")
@@ -45,7 +45,7 @@ object ScalingProbe {
       sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     val loadStart = loadAvg1
-    val spark = ToolSession.local()
+    val spark = graft.GraftSession.local()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(name.startsWith) }
 

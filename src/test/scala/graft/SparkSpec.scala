@@ -11,18 +11,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   // One session per JVM — suites share it; sbt forks one test JVM.
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+  lazy val session: SparkSession = GraftSession.setup(
+    GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      .getOrCreate())
 }

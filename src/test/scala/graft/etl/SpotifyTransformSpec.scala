@@ -105,4 +105,34 @@ class SpotifyTransformSpec extends SparkSpec {
       "artist_id")
     assert(again.count() === artists.count())
   }
+
+  test("keep-first dedup plans Window without the rewrite and TopKPerKey with it, same rows") {
+    // sessions that never register graft's rules (the benchmark harness,
+    // a library caller's own session) still run the Window path
+    val key = "spark.sql.optimizer.excludedRules"
+    def dims(perPage: Boolean): Seq[(Int, Int, Seq[String])] = {
+      val ex = SpotifyTransform.exploded(raw)
+      Seq(SpotifyTransform.artists(ex, perPage), SpotifyTransform.albums(ex, perPage))
+        .map { df =>
+          val plan = df.queryExecution.optimizedPlan
+          (plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size,
+            plan.collect { case n: graft.plans.TopKPerKeyNode => n }.size,
+            df.collect().map(_.toString).toSeq.sorted)
+        }
+    }
+    for (perPage <- Seq(false, true)) {
+      val rewritten = dims(perPage)
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, graft.plans.WindowTopKRewrite.ruleName)
+      val windowed = try dims(perPage) finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      rewritten.zip(windowed).foreach { case ((rw, rk, rRows), (ww, wk, wRows)) =>
+        assert(rw === 0 && rk > 0, s"perPage=$perPage: rewrite must replace the Window")
+        assert(ww > 0 && wk === 0, s"perPage=$perPage: excluded rewrite must keep the Window")
+        assert(rRows.nonEmpty && rRows === wRows, s"perPage=$perPage")
+      }
+    }
+  }
 }

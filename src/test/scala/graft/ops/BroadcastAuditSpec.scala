@@ -7,7 +7,8 @@ import graft.SparkSpec
   * when its build side is a BROADCAST of a VALUE-bounded (not data-bounded)
   * frame — a one-row aggregate, a query/constant set, a k-bounded cut.
   * Every registered query's physical plan is swept (AQE off, so the
-  * pre-runtime plan is inspected deterministically) and two invariants
+  * pre-runtime plan is inspected deterministically; read from the shared
+  * [[PlanCorpus]]) and two invariants
   * hold:
   *
   *  1. NO `CartesianProductExec` anywhere, ever — an unpartitioned
@@ -82,41 +83,20 @@ class BroadcastAuditSpec extends SparkSpec {
     "q103_benford" -> "one-row grand total over the 9-row digit report")
 
   test("cross joins appear only as broadcasts of audited value-bounded frames") {
-    val conf = spark.conf
-    val saved = conf.getOption("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val cartesian = scala.collection.mutable.ArrayBuffer[String]()
-      val bnlj = scala.collection.mutable.Map[String, Int]()
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan
-        val nCart = plan.collect {
-          case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c
-        }.size
-        val nBnlj = plan.collect {
-          case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
-        }.size
-        if (nCart > 0) cartesian += name
-        if (nBnlj > 0) bnlj(name) = nBnlj
-        Q.releaseAll(spark)
-      }
-      assert(cartesian.isEmpty,
-        s"CartesianProductExec (never acceptable — broadcast the bounded " +
-          s"side or add an equi/range key): ${cartesian.sorted.mkString(", ")}")
-      val unaudited = bnlj.keySet -- audited.keySet
-      val stale = audited.keySet -- bnlj.keySet
-      assert(unaudited.isEmpty,
-        s"NEW broadcast nested-loop joins (audit the build side is " +
-          s"value-bounded, then allowlist with a justification): " +
-          unaudited.toSeq.sorted.map(n => s"$n(x${bnlj(n)})").mkString(", "))
-      assert(stale.isEmpty,
-        s"STALE allowlist entries (query no longer plans a BNLJ — remove " +
-          s"them): ${stale.toSeq.sorted.mkString(", ")}")
-    } finally {
-      saved match {
-        case Some(v) => conf.set("spark.sql.adaptive.enabled", v)
-        case None => conf.unset("spark.sql.adaptive.enabled")
-      }
-    }
+    val facts = PlanCorpus.facts(spark, sf0001)
+    val cartesian = facts.collect { case (n, f) if f.cartesian > 0 => n }.toSeq
+    val bnlj = facts.collect { case (n, f) if f.bnlj > 0 => n -> f.bnlj }
+    assert(cartesian.isEmpty,
+      s"CartesianProductExec (never acceptable — broadcast the bounded " +
+        s"side or add an equi/range key): ${cartesian.sorted.mkString(", ")}")
+    val unaudited = bnlj.keySet -- audited.keySet
+    val stale = audited.keySet -- bnlj.keySet
+    assert(unaudited.isEmpty,
+      s"NEW broadcast nested-loop joins (audit the build side is " +
+        s"value-bounded, then allowlist with a justification): " +
+        unaudited.toSeq.sorted.map(n => s"$n(x${bnlj(n)})").mkString(", "))
+    assert(stale.isEmpty,
+      s"STALE allowlist entries (query no longer plans a BNLJ — remove " +
+        s"them): ${stale.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -1,10 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Machine-verifies COLUMN PRUNING across every registered query's physical
-  * plan (the WindowAudit/BroadcastAudit discipline applied to scans): a
+  * plan (the WindowAudit/BroadcastAudit discipline applied to scans, read
+  * from the shared [[PlanCorpus]]): a
   * parquet scan of a wide driver table (≥ [[PruningAuditSpec.WideCols]]
   * columns) must not read the FULL schema unless the query is on the
   * audited allowlist with a justification — at warehouse scale the scan IS
@@ -35,49 +35,25 @@ class PruningAuditSpec extends SparkSpec {
     "q02_filter_scan" -> "filters+projection together touch all 6 orders columns — the full read is the query")
 
   test("wide-table scans prune columns except on the audited full-read set") {
-    val conf = spark.conf
-    val saved = conf.getOption("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // full widths of the driver tables at the audit sf
-      val widths: Map[String, Int] =
-        Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-          .map(t => t -> spark.read.parquet(s"$sf0001/$t.parquet").schema.size)
-          .toMap
-      val fullReaders = scala.collection.mutable.Map[String, Set[String]]()
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan
-        val fullScans = plan.collect {
-          case f: FileSourceScanExec =>
-            f.relation.location.rootPaths.headOption.map(_.toString)
-              .flatMap { p =>
-                widths.keys.find(t => p.endsWith(s"$t.parquet")).map(t => (t, f))
-              }
-        }.flatten.collect {
-          case (t, f)
-              if widths(t) >= WideCols && f.requiredSchema.size >= widths(t) =>
-            t
-        }.toSet
-        if (fullScans.nonEmpty) fullReaders(name) = fullScans
-        Q.releaseAll(spark)
-      }
-      val unaudited = fullReaders.keySet -- audited.keySet
-      val stale = audited.keySet -- fullReaders.keySet
-      assert(unaudited.isEmpty,
-        s"NEW full-width wide-table scans (select only the needed columns " +
-          s"before heavy ops, or audit + allowlist): " +
-          unaudited.toSeq.sorted
-            .map(n => s"$n(${fullReaders(n).toSeq.sorted.mkString("+")})")
-            .mkString(", "))
-      assert(stale.isEmpty,
-        s"STALE allowlist entries (query now prunes — remove them): " +
-          stale.toSeq.sorted.mkString(", "))
-    } finally {
-      saved match {
-        case Some(v) => conf.set("spark.sql.adaptive.enabled", v)
-        case None => conf.unset("spark.sql.adaptive.enabled")
-      }
-    }
+    // full widths of the input tables at the audit sf
+    val widths: Map[String, Int] = PlanCorpus.Tables
+      .map(t => t -> spark.read.parquet(s"$sf0001/$t.parquet").schema.size)
+      .toMap
+    val fullReaders = PlanCorpus.facts(spark, sf0001).map { case (name, f) =>
+      name -> f.scans.collect {
+        case (t, read) if widths(t) >= WideCols && read >= widths(t) => t
+      }.toSet
+    }.filter(_._2.nonEmpty)
+    val unaudited = fullReaders.keySet -- audited.keySet
+    val stale = audited.keySet -- fullReaders.keySet
+    assert(unaudited.isEmpty,
+      s"NEW full-width wide-table scans (select only the needed columns " +
+        s"before heavy ops, or audit + allowlist): " +
+        unaudited.toSeq.sorted
+          .map(n => s"$n(${fullReaders(n).toSeq.sorted.mkString("+")})")
+          .mkString(", "))
+    assert(stale.isEmpty,
+      s"STALE allowlist entries (query now prunes — remove them): " +
+        stale.toSeq.sorted.mkString(", "))
   }
 }

@@ -7,10 +7,10 @@ import graft.SparkSpec
   * its whole input through ONE task, so it is only acceptable over a
   * VALUE-bounded (not data-bounded) input — one row per shard / calendar
   * day / dimension / top-V cut. Every registered query's optimized logical
-  * plan is swept; the set of queries carrying an unpartitioned Window must
-  * EQUAL the audited allowlist below — a new global window over raw data
-  * fails, and a stale allowlist entry (query improved or renamed) fails
-  * too, keeping the audit honest.
+  * plan is swept (read from the shared [[PlanCorpus]]); the set of queries
+  * carrying an unpartitioned Window must EQUAL the audited allowlist
+  * below — a new global window over raw data fails, and a stale allowlist
+  * entry (query improved or renamed) fails too, keeping the audit honest.
   *
   * Materialized queries (Q.materialized ends in an eager localCheckpoint,
   * so their optimized plan is an opaque RDD scan) are out of this sweep's
@@ -38,11 +38,8 @@ class WindowAuditSpec extends SparkSpec {
     "d82_packed_layout" -> "two-phase prefix sum: one row per token-budget shard")
 
   test("unpartitioned windows appear exactly on the audited value-bounded set") {
-    val offenders = scala.collection.mutable.Map[String, Int]()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = graft.tools.PlanAudit.unpartitionedWindows(fn(spark, sf0001))
-      if (n > 0) offenders(name) = n
-      Q.releaseAll(spark)
+    val offenders = PlanCorpus.facts(spark, sf0001).collect {
+      case (name, f) if f.unpartitionedWindows > 0 => name -> f.unpartitionedWindows
     }
     val unaudited = offenders.keySet -- audited.keySet
     val stale = audited.keySet -- offenders.keySet
