@@ -42,7 +42,7 @@ import org.apache.spark.sql.types._
   * Every translation is a may-keep decision, never a row filter —
   * callers re-apply all predicates above the scan, so an
   * untranslatable value degrades to "scan the leaf", never to a wrong
-  * result (the stats-skipping rule, [[VersionedTable.readAtPrunedParts]]).
+  * result (the stats-skipping rule, [[VersionedTable.readAtPruned]]).
   */
 sealed trait PartField {
   /** Base column the transform reads (what predicates name). */
@@ -573,7 +573,7 @@ object PartFields {
   }
 
   /** Translate pushed source `Filter`s into per-field leaf-token tests
-    * ([[VersionedTable.readAtPrunedPreds]]'s shape): only top-level
+    * ([[VersionedTable.readAtPruned]]'s shape): only top-level
     * conjuncts on a transform's BASE column translate — that is the
     * hidden-partitioning contract, the query names `ts`, never
     * `ts_day`. Disjunctions and untranslatable values contribute

@@ -61,13 +61,7 @@ object Q {
   // config that shapes inference (`nanosAsLong`) is the same in every
   // session of the JVM — [[graft.GraftSession]] is the one place it is set.
   private val inputSchemaCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        org.apache.spark.sql.types.StructType](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long),
-            org.apache.spark.sql.types.StructType]): Boolean =
-        size() > 1024
-    }
+    new Lru[(String, Long, Long), org.apache.spark.sql.types.StructType](1024)
 
   private def readWithCachedSchema(spark: SparkSession,
       path: String): DataFrame = {
@@ -80,14 +74,11 @@ object Q {
       else None
     } catch { case NonFatal(_) => None } // missing path: the plain read
     // below reproduces the legacy error exactly
-    key.flatMap(k => inputSchemaCache.synchronized(
-        Option(inputSchemaCache.get(k)))) match {
+    key.flatMap(inputSchemaCache.get) match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        key.foreach(k => inputSchemaCache.synchronized {
-          inputSchemaCache.put(k, df.schema); ()
-        })
+        key.foreach(inputSchemaCache.put(_, df.schema))
         df
     }
   }
@@ -253,6 +244,4 @@ object Q {
 
   val sqlDiscPrice: String =
     "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1-l_discount AS DECIMAL(4,2))"
-  val sqlChargePrice: String =
-    s"$sqlDiscPrice * CAST(1+l_tax AS DECIMAL(4,2))"
 }

@@ -83,26 +83,54 @@ object VersionedTable {
     txt.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  private def manifestLines(spark: SparkSession, root: String, v: Long): Seq[String] =
-    manifestLinesFile(spark, root, s"$v.commit")
-
   // a manifest is optional `#key=value` metadata headers, then one data
   // directory per line (headerless pre-metadata manifests parse the same)
   private[ops] def manifestDirs(spark: SparkSession, root: String, v: Long): Seq[String] =
-    manifestLines(spark, root, v).filterNot(_.startsWith("#"))
+    manifestOf(spark, root, v)._1
 
   // dirs + meta from ONE manifest open — the hot read paths use this so a
   // snapshot read costs a single _log round-trip (separate manifestDirs +
   // manifestMeta calls would open the same file twice, which matters when
   // _log lives on an object store)
   private[ops] def manifestOf(spark: SparkSession, root: String,
-      v: Long): (Seq[String], Map[String, String]) = {
-    val lines = manifestLines(spark, root, v)
+      v: Long): (Seq[String], Map[String, String]) =
+    manifestFileOf(spark, root, s"$v.commit")
+
+  // the one manifest parser, for main (`<v>.commit`) and branch
+  // (`b.<name>.<v>.commit`) files alike
+  private def manifestFileOf(spark: SparkSession, root: String,
+      file: String): (Seq[String], Map[String, String]) = {
+    val lines = manifestLinesFile(spark, root, file)
     val meta = lines.filter(_.startsWith("#"))
       .map(_.drop(1).split("=", 2))
       .collect { case Array(k, value) => k -> value }.toMap
     (lines.filterNot(_.startsWith("#")), meta)
   }
+
+  // one resolved snapshot: its version, data entries and manifest headers
+  private final case class Snapshot(v: Long, dirs: Seq[String],
+      meta: Map[String, String])
+
+  // THE snapshot resolver every versioned read and ref goes through: one
+  // log listing, the version check, one manifest open. `v` None = the tip;
+  // `branch` resolves against that branch's log instead of main's.
+  private def snapshot(spark: SparkSession, root: String, v: Option[Long],
+      branch: Option[String] = None): Snapshot = {
+    val vs = branch.fold(versions(spark, root))(branchVersions(spark, root, _))
+    require(vs.nonEmpty, branch.fold(
+      s"VersionedTable: no committed snapshot at $root")(b => s"readBranch: no branch '$b'"))
+    val ver = v.getOrElse(vs.last)
+    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
+    val (dirs, meta) = manifestFileOf(spark, root,
+      branch.fold(s"$ver.commit")(b => s"b.$b.$ver.commit"))
+    Snapshot(ver, dirs, meta)
+  }
+
+  // a resolved snapshot's rows: its entries read by name, minus the rows
+  // its deletion vectors tombstone
+  private def readSnapshot(spark: SparkSession, root: String,
+      snap: Snapshot): DataFrame =
+    applyDvs(spark, root, snap.meta, readDirs(spark, root, snap.dirs, snap.meta))
 
   /** Commit (publish) time of version `v`, epoch MICROseconds.
     * Resolution is IN-COMMIT first: every manifest published by this
@@ -141,9 +169,7 @@ object VersionedTable {
     * streaming transaction stamps). Empty for plain commits.
     */
   def manifestMeta(spark: SparkSession, root: String, v: Long): Map[String, String] =
-    manifestLines(spark, root, v).filter(_.startsWith("#"))
-      .map(_.drop(1).split("=", 2))
-      .collect { case Array(k, value) => k -> value }.toMap
+    manifestOf(spark, root, v)._2
 
   /** True when commit `v` rewrote physical layout without changing logical
     * content (compaction) — the dataChange=false commits a change feed
@@ -163,7 +189,7 @@ object VersionedTable {
   // generations still align by name), and the manifest lists the LEAF
   // dirs. Partition pruning is therefore a pure manifest-LINE decision
   // (no listing, no footer reads — the same economics as stats
-  // skipping, see readAtPrunedParts), it composes conjunctively with
+  // skipping, see readAtPruned), it composes conjunctively with
   // stats windows, and every kept leaf is a plain parquet dir, so the
   // single multi-path scan fast path survives. At 100 TB: a categorical
   // predicate (tenant, region, day) skips whole leaf dirs from ONE
@@ -180,12 +206,6 @@ object VersionedTable {
     */
   def partitionFieldsOf(props: Map[String, String]): Seq[PartField] =
     props.get("partition").toSeq.flatMap(PartFields.parseList)
-
-  /** The SOURCE columns the declared partition transforms read (for
-    * identity partitioning these are the partition columns themselves).
-    */
-  def partitionColsOf(props: Map[String, String]): Seq[String] =
-    partitionFieldsOf(props).map(_.source)
 
   /** EVERY partition field the table's spec history has declared — the
     * CURRENT spec plus the `partition.history` ledger
@@ -393,10 +413,8 @@ object VersionedTable {
             min(col(a)).cast("long").as(s"__min_$i"),
             max(col(a)).cast("long").as(s"__max_$i"),
             approx_count_distinct(col(a)).as(s"__ndv_$i")) }
-        pendingWriteObs.synchronized {
-          pendingWriteObs.put((root, gen),
-            WriteObs(obsCols.map(_.toLowerCase).zip(integral), obs))
-        }
+        pendingWriteObs.put((root, gen),
+          WriteObs(obsCols.map(_.toLowerCase).zip(integral), obs))
         df.observe(obs, metrics.head, metrics.drop(1): _*)
       }
     def blooming(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
@@ -593,12 +611,7 @@ object VersionedTable {
   // same columns the footer channel would record) and the observation.
   private final case class WriteObs(cols: Seq[(String, Boolean)],
       obs: org.apache.spark.sql.Observation)
-  private val pendingWriteObs =
-    new java.util.LinkedHashMap[(String, String), WriteObs](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), WriteObs]): Boolean =
-        size() > 1024
-    }
+  private val pendingWriteObs = new Lru[(String, String), WriteObs](1024)
 
   private def fileHeadersListed(spark: SparkSession,
       listed: Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])],
@@ -822,15 +835,8 @@ object VersionedTable {
     * and carried by every commit kind since.
     */
   def tableProperties(spark: SparkSession, root: String,
-      v: Option[Long] = None): Map[String, String] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
-    propHeaders(spark, root, ver).map { case (k, value) =>
-      k.stripPrefix("prop:") -> value
-    }
-  }
+      v: Option[Long] = None): Map[String, String] =
+    tablePropsOf(snapshot(spark, root, v).meta)
 
   // merge-on-read: anti-join the snapshot frame against the outstanding
   // deletion vectors of an already-parsed manifest meta. DVs are key
@@ -931,23 +937,60 @@ object VersionedTable {
     }
   }
 
+  // THE carry rule: the headers of a manifest that survive into any next
+  // manifest keeping all its entries — append, metadata-only edits, refs,
+  // branch forks. Entry-scoped stats:/files:/fstats: headers are an
+  // optimization (dropping them turns data skipping off), dv: headers are
+  // correctness (dropping one resurrects deleted rows), prop: headers
+  // describe the table. A new header kind that must survive such commits
+  // is added here and nowhere else; per-commit facts (kind stamps, txn
+  // stamps, cdf:) are not carried. Every entry header names an entry of
+  // its own manifest (each commit path records them for the entries it
+  // lists), so carrying them all is carrying the kept entries'.
+  private def carriedHeaders(meta: Map[String, String]): Map[String, String] =
+    meta.filter { case (k, _) =>
+      entryHeaderDir(k).isDefined || k.startsWith("dv:") || k.startsWith("prop:")
+    }
+
   // THE append contract, shared by every append-shaped commit (batch and
-  // streaming): keep the previous snapshot's directories and carry its
-  // stats: headers (optimization — dropping them turns data skipping
-  // off) AND its dv: headers (correctness — dropping one resurrects
-  // deleted rows). Keeping this in one place is what prevents the header
-  // kinds from diverging between commit paths (idempotentCommit once
-  // silently dropped stats: by re-implementing this inline).
+  // streaming): keep the previous snapshot's directories and its carried
+  // headers (idempotentCommit once silently dropped stats: by
+  // re-implementing this inline).
   private def appendCarry(spark: SparkSession, root: String,
       lastV: Long): (Seq[String], Map[String, String]) = {
     val (prev, meta) = manifestOf(spark, root, lastV)
-    val kept = prev.toSet
-    val carried = meta.filter { case (k, _) =>
-      entryHeaderDir(k).exists(kept.contains) ||
-        k.startsWith("dv:") || k.startsWith("prop:")
-    }
-    (prev, carried)
+    (prev, carriedHeaders(meta))
   }
+
+  // the bounded optimistic retry of every commit that may land past a
+  // concurrent writer: `attempt(n)` returns Some(result) when its publish
+  // won, None when another writer took the version (re-read the log and
+  // try again). Commits that must not land past a writer abort instead.
+  @annotation.tailrec
+  private def retryPublish[A](root: String, n: Int = 1)(
+      attempt: Int => Option[A]): A =
+    if (n > 20)
+      throw new java.io.IOException(s"VersionedTable: publish contention at $root")
+    else attempt(n) match {
+      case Some(a) => a
+      case None => retryPublish(root, n + 1)(attempt)
+    }
+
+  // THE metadata-only commit: each attempt resolves the tip, lets `edit`
+  // turn it and its carried headers into the new manifest's headers
+  // (validation inside `edit` re-runs whenever the tip moved), and
+  // publishes the tip's entries unchanged at tip+1. `raceHook` is the
+  // specs' seam between the first attempt's edit and its publish.
+  private def editTip(spark: SparkSession, root: String,
+      raceHook: () => Unit = () => ())(
+      edit: (Snapshot, Map[String, String]) => Map[String, String]): Long =
+    retryPublish(root) { attempt =>
+      val tip = snapshot(spark, root, None)
+      val headers = edit(tip, carriedHeaders(tip.meta))
+      if (attempt == 1) raceHook()
+      if (tryPublish(spark, root, tip.v + 1, tip.dirs, headers)) Some(tip.v + 1)
+      else None
+    }
 
   // [min,max,ndv,rows] headers for a freshly written generation, computed
   // from the written files — ONE narrow agg regardless of how many
@@ -977,10 +1020,6 @@ object VersionedTable {
       }.toMap
     }
 
-  private def genStatsOf(spark: SparkSession, root: String, gen: String,
-      statsCol: Option[String]): Map[String, String] =
-    genStatsMulti(spark, root, gen, statsCol.toSeq)
-
   // [min,max,ndv,rows] headers for a commit's manifest ENTRIES — ONE
   // Spark job regardless of partition fan-out (per-leaf genStatsMulti
   // calls would schedule N sequential jobs for an N-partition batch):
@@ -1004,9 +1043,7 @@ object VersionedTable {
     val obsRec: Option[WriteObs] = {
       val gens = entries.map(genPrefixOf).distinct
       if (gens.size != 1) None
-      else pendingWriteObs.synchronized {
-        Option(pendingWriteObs.remove((root, gens.head)))
-      }
+      else pendingWriteObs.remove((root, gens.head))
     }
     // the observation serves a column ONLY when it is plain-integral:
     // for timestamps/dates/decimals the observed `cast(long)` reads the
@@ -1125,22 +1162,14 @@ object VersionedTable {
   // generation — emptiness memoized; committed generations are
   // immutable) — a partial answer would under-count and could OOM a
   // forced broadcast.
-  private val entryEmptyCache =
-    new java.util.LinkedHashMap[(String, String), java.lang.Boolean](
-        1024, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), java.lang.Boolean]): Boolean =
-        size() > 4096
-    }
+  private val entryEmptyCache = new Lru[(String, String), Boolean](4096)
 
   private def entryEmpty(spark: SparkSession, root: String, d: String,
       meta: Map[String, String] = Map.empty): Boolean =
     // the manifest's own per-file record answers without ANY listing —
     // and is immune to the vanished-dir ambiguity below
     recordedFiles(meta, d).map(_.isEmpty).getOrElse {
-    entryEmptyCache.synchronized {
-      Option(entryEmptyCache.get((root, d)))
-    }.map(_.booleanValue).getOrElse {
+    entryEmptyCache.get((root, d)).getOrElse {
       val hfs = fs(spark, root)
       // A VANISHED dir is "unknown", not "provably empty": a time-travel
       // stats probe over a version whose kept dir was since vacuumed
@@ -1158,9 +1187,7 @@ object VersionedTable {
             val n = st.getPath.getName
             !n.endsWith(".parquet") || n.startsWith("_") || n.startsWith(".")
           })
-          entryEmptyCache.synchronized {
-            entryEmptyCache.put((root, d), java.lang.Boolean.valueOf(empty))
-          }
+          entryEmptyCache.put((root, d), empty)
           empty
       }
     }
@@ -1265,11 +1292,9 @@ object VersionedTable {
         genEntries(spark, root, g).map(e => s"cdf:$e" -> "true").toMap
     }
     val genStats = genStatsForEntries(spark, root, entries, trackedCols)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
+    // a publish loss means another writer took this version — retry on a
+    // fresh read of the log (optimistic concurrency)
+    retryPublish(root) { _ =>
       val vs = versions(spark, root)
       val next = vs.lastOption.getOrElse(0L) + 1
       val (dirs, carried) =
@@ -1280,86 +1305,53 @@ object VersionedTable {
           val (prev, prevCarry) = appendCarry(spark, root, vs.last)
           (prev ++ entries, prevCarry)
         }
-      // a publish loss means another writer took this version — retry on a
-      // fresh read of the log (optimistic concurrency)
       if (tryPublish(spark, root, next, dirs,
-          carried ++ genStats ++ cdfHeaders ++ meta))
-        return next
+          carried ++ genStats ++ cdfHeaders ++ meta)) Some(next)
+      else None
     }
-    -1L // unreachable
   }
 
-  /** Stats-pruned snapshot read — the manifest-level half of data
-    * skipping (parquet row-group pruning is the in-file half, see
-    * [[Formats.bloomWrite]]): keep only the generations whose recorded
-    * `statsCol` range intersects [lo, hi], plus any generation with no
-    * recorded stats (absence means "must scan" — stats are an
-    * optimization, never a correctness gate, so rewrites that drop them
-    * stay safe). At scale this is what turns a time-partitioned append
-    * history into an O(queried-window) scan instead of O(table): the
-    * decision reads ONE manifest, no file listing, no footers. The
-    * caller still applies its row filter — pruning is generation-level.
-    * Returns (frame, generations read, generations total).
+  /** PRUNED snapshot read — the manifest-level half of data skipping
+    * (parquet row-group pruning is the in-file half, see
+    * [[Formats.bloomWrite]]), over two dimensions composed
+    * conjunctively:
+    *  - STATS windows: keep only the generations whose recorded range
+    *    intersects EVERY `(col, lo, hi)` window — the two-dimensional
+    *    prune a time-partitioned multi-tenant table lives on
+    *    (`event_time` window × tenant range: each predicate alone keeps
+    *    many generations, the conjunction keeps few). A generation with
+    *    no recorded stats for some column always survives that column's
+    *    test: absence means "must scan" — stats are an optimization,
+    *    never a correctness gate, so rewrites that drop them stay safe.
+    *    Inside a kept generation, per-file `fstats:` records skip FILES
+    *    the same way ([[prunedFilesOf]]).
+    *  - PARTITION token tests, per declared partition field: an entry is
+    *    dropped only when its own `__p_<field>=<token>` path segment
+    *    PROVES no row can match. Entries without the segment —
+    *    unpartitioned generations, pre-partitioning history, DV-era plain
+    *    rewrites — always scan. A pushed equality/IN/IS NULL converts a
+    *    value set with `allowed.contains` (None = the NULL partition); a
+    *    pushed RANGE on a base column (`ts BETWEEN …` over `days(ts)`)
+    *    becomes an ordered token window no value set can express
+    *    ([[PartFields.prunePredicates]] builds the tests from pushed
+    *    filters).
+    *
+    * At scale this is what turns a time-partitioned append history into
+    * an O(queried-window) scan instead of O(table), and keeps a
+    * `tenant = 'x'` predicate to O(tenant) leaf dirs: the whole decision
+    * reads ONE manifest — no file listing, no footers. Pruning is
+    * generation- and file-level, so callers re-apply every filter above
+    * the scan. Returns (frame, entries kept, entries total).
     */
   def readAtPruned(spark: SparkSession, root: String, v: Option[Long],
-      statsCol: String, lo: Long, hi: Long): (DataFrame, Int, Int) =
-    readAtPrunedMulti(spark, root, v, Seq((statsCol, lo, hi)))
-
-  /** CONJUNCTIVE multi-column data skipping: keep only the generations
-    * whose recorded range intersects EVERY `(col, lo, hi)` window — the
-    * two-dimensional prune a time-partitioned multi-tenant table lives
-    * on (`event_time` window × tenant range: each predicate alone keeps
-    * many generations, the conjunction keeps few). A generation with no
-    * recorded stats for some column always survives that column's test
-    * (absence = "must scan" — stats stay an optimization, never a
-    * correctness gate). Same cost model as [[readAtPruned]]: the whole
-    * decision reads ONE manifest.
-    */
-  def readAtPrunedMulti(spark: SparkSession, root: String, v: Option[Long],
-      windows: Seq[(String, Long, Long)]): (DataFrame, Int, Int) = {
-    require(windows.nonEmpty, "readAtPrunedMulti: no prune windows")
-    readAtPrunedParts(spark, root, v, windows, Nil)
-  }
-
-  /** PARTITION + STATS pruned snapshot read — the two manifest-level
-    * skipping dimensions composed conjunctively. `partKeep` gives, per
-    * declared partition column, the ALLOWED partition values (rendered
-    * as partition-path strings; None = the NULL partition) translated
-    * from a pushed equality/IN/IS NULL predicate; an entry is dropped
-    * only when its own `__p_col=value` path segment PROVES no row can
-    * match. Entries without the segment — unpartitioned generations,
-    * pre-partitioning history, DV-era plain rewrites — always scan:
-    * like stats, partition pruning is an optimization, never a
-    * correctness gate (callers re-apply every filter above the scan).
-    * The whole decision reads ONE manifest: no listing, no footers — at
-    * 100 TB a `tenant = 'x'` predicate keeps O(tenant) leaf dirs out of
-    * O(table) from a bytes-sized metadata read. Returns (frame, kept
-    * entries, total entries).
-    */
-  def readAtPrunedParts(spark: SparkSession, root: String, v: Option[Long],
       windows: Seq[(String, Long, Long)],
-      partKeep: Seq[(String, Set[Option[String]])]): (DataFrame, Int, Int) =
-    readAtPrunedPreds(spark, root, v, windows,
-      partKeep.map { case (c, allowed) =>
-        c -> ((t: Option[String]) => allowed.contains(t)) })
+      partPreds: Seq[(String, Option[String] => Boolean)] = Nil): (DataFrame, Int, Int) =
+    readPruned(spark, root, snapshot(spark, root, v), windows, partPreds)
 
-  /** [[readAtPrunedParts]] generalized to arbitrary per-field TOKEN
-    * TESTS — what derived partition transforms need: a pushed RANGE on
-    * a base column (`ts BETWEEN …` over `days(ts)`) translates to an
-    * ordered token window no value SET can express
-    * ([[PartFields.prunePredicates]] builds the tests from pushed
-    * filters). Same contract: an entry without the field's path
-    * segment always scans, the decision reads ONE manifest, and every
-    * filter is re-applied above the scan.
-    */
-  def readAtPrunedPreds(spark: SparkSession, root: String, v: Option[Long],
+  private def readPruned(spark: SparkSession, root: String, snap: Snapshot,
       windows: Seq[(String, Long, Long)],
       partPreds: Seq[(String, Option[String] => Boolean)]): (DataFrame, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
-    val (dirs, meta) = manifestOf(spark, root, ver)
+    val Snapshot(_, dirs, meta) = snap
     val kept = keptEntries(dirs, meta, windows, partPreds)
     // FILE-level skipping inside kept generations (r18): a kept entry
     // whose manifest records per-file [min,max] for every window column
@@ -1374,7 +1366,7 @@ object VersionedTable {
       }
     }
     val df =
-      if (units.isEmpty) readAt(spark, root, Some(ver)).limit(0)
+      if (units.isEmpty) readSnapshot(spark, root, snap).limit(0)
       else applyDvs(spark, root, meta,
         readDirs(spark, root, units, meta))
     (df, kept.size, dirs.size)
@@ -1444,11 +1436,7 @@ object VersionedTable {
   def scanSizeBytes(spark: SparkSession, root: String, v: Option[Long],
       windows: Seq[(String, Long, Long)],
       partPreds: Seq[(String, Option[String] => Boolean)]): (Long, Int, Int) = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
-    val (dirs, meta) = manifestOf(spark, root, ver)
+    val Snapshot(_, dirs, meta) = snapshot(spark, root, v)
     val kept = keptEntries(dirs, meta, windows, partPreds)
     // per-file manifest records (r18) answer the whole estimate from
     // the manifest read already paid — ZERO listing RPCs — and apply
@@ -1481,16 +1469,11 @@ object VersionedTable {
       // separate exists() probe would double the metadata RPCs
       val b = try hfs.getContentSummary(p).getLength
         catch { case _: java.io.FileNotFoundException => 0L }
-      entryBytesCache.synchronized {
-        entryBytesCache.put((root, d), java.lang.Long.valueOf(b))
-      }
+      entryBytesCache.put((root, d), b)
       b
     }
-    val (hits, misses) = unrecorded.map { d =>
-      d -> entryBytesCache.synchronized {
-        Option(entryBytesCache.get((root, d))).map(_.longValue)
-      }
-    }.partition(_._2.isDefined)
+    val (hits, misses) = unrecorded.map(d => d -> entryBytesCache.get((root, d)))
+      .partition(_._2.isDefined)
     val missBytes =
       if (misses.size <= 1) misses.map { case (d, _) => measure(d) }
       else {
@@ -1528,13 +1511,7 @@ object VersionedTable {
   // bounded LRU of per-generation on-disk bytes (metadata, ~bytes per
   // entry). Keyed (root, entryDir): generations are immutable once
   // committed — vacuum only ever deletes dirs that no current read keeps
-  private val entryBytesCache =
-    new java.util.LinkedHashMap[(String, String), java.lang.Long](
-        1024, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), java.lang.Long]): Boolean =
-        size() > 4096
-    }
+  private val entryBytesCache = new Lru[(String, String), Long](4096)
 
   /** COMPACTION as a commit: rewrite the latest snapshot's generations
     * into ONE new generation and publish it as a REWRITE commit
@@ -1774,24 +1751,12 @@ object VersionedTable {
   // session is built by [[graft.GraftSession]], the one place both are
   // pinned; a JVM mixing sessions with other values would need the cache
   // keyed by them.
-  private val genSchemaCache =
-    new java.util.LinkedHashMap[(String, String), StructType](
-        1024, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), StructType]): Boolean =
-        size() > 4096
-    }
+  private val genSchemaCache = new Lru[(String, String), StructType](4096)
 
   private def genSchemaCached(spark: SparkSession, root: String,
-      entry: String): StructType = {
-    val k = (root, entry)
-    genSchemaCache.synchronized { Option(genSchemaCache.get(k)) }
-      .getOrElse {
-        val s = probeGenSchema(spark, root, entry)
-        genSchemaCache.synchronized { genSchemaCache.put(k, s) }
-        s
-      }
-  }
+      entry: String): StructType =
+    genSchemaCache.getOrElseUpdate((root, entry))(
+      probeGenSchema(spark, root, entry))
 
   // one cache MISS's schema probe, as a driver-side footer read instead
   // of a Spark job (r19): every generation is written by THIS engine's
@@ -2451,12 +2416,9 @@ object VersionedTable {
     */
   def filesSummary(spark: SparkSession, root: String,
       v: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    val meta = manifestMeta(spark, root, ver)
+    val Snapshot(_, dirs, meta) = snapshot(spark, root, v)
     val hfs = fs(spark, root)
-    val rows = manifestDirs(spark, root, ver).map { d =>
+    val rows = dirs.map { d =>
       // per-file manifest records (r18): counts/bytes/rows from the one
       // manifest read, no listing; pre-r18 entries list as before
       val (nFiles, bytes) = recordedFiles(meta, d) match {
@@ -2612,30 +2574,16 @@ object VersionedTable {
     // constraint (TOCTOU on the whole-table check).
     val newConstraints = constraintsOf(set)
     var validatedAtV: Long = -1L
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      if (newConstraints.nonEmpty && vs.last != validatedAtV) {
+    // raceHook: the test seam for a commit between validate and publish
+    editTip(spark, root, raceHook) { (tip, carried) =>
+      if (newConstraints.nonEmpty && tip.v != validatedAtV) {
         enforceConstraints(spark, root, newConstraints,
-          readAt(spark, root, Some(vs.last)), gen = None)
-        validatedAtV = vs.last
+          readSnapshot(spark, root, tip), gen = None)
+        validatedAtV = tip.v
       }
-      val (dirs, meta) = manifestOf(spark, root, vs.last)
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) && !unset.contains(k.stripPrefix("prop:"))
-      }
-      val edited = kept ++ set.map { case (k, v) => s"prop:$k" -> v } +
-        ("properties" -> "true")
-      val next = vs.last + 1
-      if (attempt == 1) raceHook() // test seam: commit-between-validate-and-publish
-      if (tryPublish(spark, root, next, dirs, edited)) return next
+      carried.filterNot { case (k, _) => unset.contains(k.stripPrefix("prop:")) } ++
+        set.map { case (k, v) => s"prop:$k" -> v } + ("properties" -> "true")
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE ADD COLUMNS as a SCHEMA-EVOLUTION COMMIT: append an
@@ -2764,17 +2712,10 @@ object VersionedTable {
       newName: String, raceHook: () => Unit = () => ()): Long = {
     require(!oldName.equalsIgnoreCase(newName),
       s"renameColumn: '$oldName' and '$newName' are the same name")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val tipV = vs.last
-      val (dirs, meta) = manifestOf(spark, root, tipV)
+    editTip(spark, root, raceHook) { (tip, carried) =>
+      val meta = tip.meta
       val props = tablePropsOf(meta)
-      val schema = readAt(spark, root, Some(tipV)).schema // logical view
+      val schema = readSnapshot(spark, root, tip).schema // logical view
       val old = schema.fieldNames.find(_.equalsIgnoreCase(oldName))
         .getOrElse(throw new IllegalArgumentException(
           s"renameColumn: no column '$oldName' in " +
@@ -2830,22 +2771,16 @@ object VersionedTable {
         k -> (if (v.equalsIgnoreCase(old)) newName else v)
       } + (old -> newName)
       val finalMap = chained.filterNot { case (k, v) => k.equalsIgnoreCase(v) }
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) && !k.startsWith("prop:colmap.") &&
+      val kept = carried.filterNot { case (k, _) =>
+        k.startsWith("prop:colmap.") ||
           // a widen follows its column across the rename (re-keyed below)
-          !k.equalsIgnoreCase(s"prop:widen.$old")
+          k.equalsIgnoreCase(s"prop:widen.$old")
       }
-      val mapped = kept ++ finalMap.map { case (k, v) =>
-        s"prop:colmap.$k" -> v } ++
+      kept ++ finalMap.map { case (k, v) => s"prop:colmap.$k" -> v } ++
         meta.collectFirst { case (k, v)
             if k.equalsIgnoreCase(s"prop:widen.$old") =>
-          s"prop:widen.$newName" -> v }
-      if (attempt == 1) raceHook()
-      if (tryPublish(spark, root, tipV + 1, dirs,
-          mapped + ("alter" -> "rename_column"))) return tipV + 1
+          s"prop:widen.$newName" -> v } + ("alter" -> "rename_column")
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit (the logical-drop
@@ -2881,18 +2816,11 @@ object VersionedTable {
     * version.
     */
   def dropColumn(spark: SparkSession, root: String, name: String,
-      raceHook: () => Unit = () => ()): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val tipV = vs.last
-      val (dirs, meta) = manifestOf(spark, root, tipV)
+      raceHook: () => Unit = () => ()): Long =
+    editTip(spark, root, raceHook) { (tip, carried) =>
+      val meta = tip.meta
       val props = tablePropsOf(meta)
-      val schema = readAt(spark, root, Some(tipV)).schema // logical view
+      val schema = readSnapshot(spark, root, tip).schema // logical view
       val old = schema.fieldNames.find(_.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"dropColumn: no column '$name' in " +
@@ -2925,22 +2853,15 @@ object VersionedTable {
       val cm = colmapOf(meta)
       val phys = cm.collect {
         case (k, v) if v.equalsIgnoreCase(old) => k }.toSeq :+ old
-      validateProps(phys.map(p => s"dropcol.$p" -> tipV.toString).toMap)
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) &&
-          !phys.exists(p => k.equalsIgnoreCase(s"prop:colmap.$p")) &&
+      validateProps(phys.map(p => s"dropcol.$p" -> tip.v.toString).toMap)
+      val kept = carried.filterNot { case (k, _) =>
+        phys.exists(p => k.equalsIgnoreCase(s"prop:colmap.$p")) ||
           // a dropped column's widen cast retires with it
-          !k.equalsIgnoreCase(s"prop:widen.$old")
+          k.equalsIgnoreCase(s"prop:widen.$old")
       }
-      val edited = kept ++
-        phys.map(p => s"prop:dropcol.$p" -> tipV.toString) +
+      kept ++ phys.map(p => s"prop:dropcol.$p" -> tip.v.toString) +
         ("alter" -> "drop_column")
-      if (attempt == 1) raceHook()
-      if (tryPublish(spark, root, tipV + 1, dirs, edited)) return tipV + 1
     }
-    -1L // unreachable
-  }
 
   // lossless type promotions (the Iceberg evolution set): a widened
   // read can never overflow, truncate or round a committed value
@@ -2988,18 +2909,10 @@ object VersionedTable {
     */
   def widenColumnType(spark: SparkSession, root: String, name: String,
       newType: org.apache.spark.sql.types.DataType,
-      raceHook: () => Unit = () => ()): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val tipV = vs.last
-      val (dirs, meta) = manifestOf(spark, root, tipV)
-      val props = tablePropsOf(meta)
-      val schema = readAt(spark, root, Some(tipV)).schema // logical view
+      raceHook: () => Unit = () => ()): Long =
+    editTip(spark, root, raceHook) { (tip, carried) =>
+      val props = tablePropsOf(tip.meta)
+      val schema = readSnapshot(spark, root, tip).schema // logical view
       val field = schema.find(_.name.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"widenColumnType: no column '$name' in " +
@@ -3016,22 +2929,14 @@ object VersionedTable {
           "transform (current or historical spec) — bucket/truncate " +
           "tokens are computed from the physical type, so a widen " +
           "would desynchronize pruning from the written leaves")
-      require(!dvHeadersOf(meta).values.exists(_.equalsIgnoreCase(field.name)),
+      require(!dvHeadersOf(tip.meta).values.exists(_.equalsIgnoreCase(field.name)),
         s"widenColumnType: outstanding deletion vectors tombstone " +
           s"'${field.name}' — run compact() to materialize them first")
       validateProps(Map(s"widen.${field.name}" -> newType.catalogString))
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) &&
-          !k.equalsIgnoreCase(s"prop:widen.${field.name}")
-      }
-      if (attempt == 1) raceHook()
-      if (tryPublish(spark, root, tipV + 1, dirs,
-          kept + (s"prop:widen.${field.name}" -> newType.catalogString) +
-            ("alter" -> "widen_column"))) return tipV + 1
+      carried.filterNot(_._1.equalsIgnoreCase(s"prop:widen.${field.name}")) +
+        (s"prop:widen.${field.name}" -> newType.catalogString) +
+        ("alter" -> "widen_column")
     }
-    -1L // unreachable
-  }
 
   /** PARTITION SPEC EVOLUTION (Iceberg's `ALTER TABLE … ADD/DROP/
     * REPLACE PARTITION FIELD`) as a METADATA-ONLY commit: the new
@@ -3070,18 +2975,10 @@ object VersionedTable {
     * loss retries at the next version. Returns the committed version.
     */
   def evolvePartitionSpec(spark: SparkSession, root: String,
-      newSpec: String, raceHook: () => Unit = () => ()): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val tipV = vs.last
-      val (dirs, meta) = manifestOf(spark, root, tipV)
-      val props = tablePropsOf(meta)
-      val schema = readAt(spark, root, Some(tipV)).schema // logical view
+      newSpec: String, raceHook: () => Unit = () => ()): Long =
+    editTip(spark, root, raceHook) { (tip, carried) =>
+      val props = tablePropsOf(tip.meta)
+      val schema = readSnapshot(spark, root, tip).schema // logical view
       val fields = PartFields.validate(
         if (newSpec.trim.isEmpty) Nil else PartFields.parseList(newSpec),
         schema)
@@ -3104,22 +3001,13 @@ object VersionedTable {
       val newHistory = (props.get("partition.history").toSeq
         .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty) :+ curSpec)
         .filter(_.nonEmpty).distinct
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) &&
-          k != "prop:partition" && k != "prop:partition.history"
-      }
-      val edited = kept ++
+      carried - "prop:partition" - "prop:partition.history" ++
         (if (fields.isEmpty) Map.empty
          else Map("prop:partition" -> newCanon)) ++
         (if (newHistory.isEmpty) Map.empty
          else Map("prop:partition.history" -> newHistory.mkString(";"))) +
         ("alter" -> "set_partition_spec")
-      if (attempt == 1) raceHook()
-      if (tryPublish(spark, root, tipV + 1, dirs, edited)) return tipV + 1
     }
-    -1L // unreachable
-  }
 
   /** RESTORE (rollback) as a COMMIT: publish a NEW version whose manifest
     * is a copy of version `toV`'s — the table's latest snapshot becomes
@@ -3147,11 +3035,8 @@ object VersionedTable {
     require(vs.contains(toV), s"VersionedTable: version $toV not in $vs")
     val baseV = vs.last
     if (toV == baseV) return Some(baseV) // restoring to the tip: no-op
-    val dirs = manifestDirs(spark, root, toV)
-    val meta = manifestMeta(spark, root, toV)
-    val keepHeaders = meta.filter { case (k, _) =>
-      entryHeaderDir(k).isDefined || k.startsWith("dv:")
-    }
+    val (dirs, meta) = manifestOf(spark, root, toV)
+    val keepHeaders = carriedHeaders(meta).filterNot(_._1.startsWith("prop:"))
     // stats/dv headers describe toV's generations (restored verbatim);
     // properties describe the TABLE, so the restore keeps the CURRENT
     // tip's — rolling back a bad data load must not revert an unrelated
@@ -3205,13 +3090,8 @@ object VersionedTable {
   }
 
   private def branchManifestOf(spark: SparkSession, root: String,
-      name: String, v: Long): (Seq[String], Map[String, String]) = {
-    val lines = manifestLinesFile(spark, root, s"b.$name.$v.commit")
-    val meta = lines.filter(_.startsWith("#"))
-      .map(_.drop(1).split("=", 2))
-      .collect { case Array(k, value) => k -> value }.toMap
-    (lines.filterNot(_.startsWith("#")), meta)
-  }
+      name: String, v: Long): (Seq[String], Map[String, String]) =
+    manifestFileOf(spark, root, s"b.$name.$v.commit")
 
   /** Committed versions of branch `name`, ascending (empty = no branch).
     * The first entry is the fork point (a copy of that main version's
@@ -3251,51 +3131,24 @@ object VersionedTable {
   def tagVersion(spark: SparkSession, root: String, name: String,
       v: Option[Long] = None): Long = {
     refName(name)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val target = v.getOrElse(vs.last)
-      require(vs.contains(target),
-        s"tagVersion: version $target not in $vs")
-      val (dirs, meta) = manifestOf(spark, root, vs.last)
-      val kept = meta.filter { case (k, _) =>
-        entryHeaderDir(k).isDefined || k.startsWith("dv:") || k.startsWith("prop:")
-      }
-      require(!kept.contains(s"prop:ref.$name"),
+    editTip(spark, root) { (tip, carried) =>
+      // an explicit target must be a committed version (resolved against
+      // each attempt's log, like the tip)
+      val target = v.fold(tip.v)(t => snapshot(spark, root, Some(t)).v)
+      require(!carried.contains(s"prop:ref.$name"),
         s"tagVersion: tag '$name' already exists — deleteTag first " +
           "(a silently moving tag is a correctness hazard)")
-      if (tryPublish(spark, root, vs.last + 1, dirs,
-          kept + (s"prop:ref.$name" -> target.toString) + ("tag" -> name)))
-        return vs.last + 1
+      carried + (s"prop:ref.$name" -> target.toString) + ("tag" -> name)
     }
-    -1L // unreachable
   }
 
   /** Remove tag `name` (metadata-only commit, kind `tag`). */
-  def deleteTag(spark: SparkSession, root: String, name: String): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-      val (dirs, meta) = manifestOf(spark, root, vs.last)
-      require(meta.contains(s"prop:ref.$name"),
+  def deleteTag(spark: SparkSession, root: String, name: String): Long =
+    editTip(spark, root) { (_, carried) =>
+      require(carried.contains(s"prop:ref.$name"),
         s"deleteTag: no tag '$name'")
-      val kept = meta.filter { case (k, _) =>
-        (entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-          k.startsWith("prop:")) && k != s"prop:ref.$name"
-      }
-      if (tryPublish(spark, root, vs.last + 1, dirs,
-          kept + ("tag" -> name))) return vs.last + 1
+      carried - s"prop:ref.$name" + ("tag" -> name)
     }
-    -1L // unreachable
-  }
 
   /** Resolve a ref name to a main-log version via the tip's `ref.`
     * properties (tags). None = no such ref.
@@ -3316,19 +3169,13 @@ object VersionedTable {
   def createBranch(spark: SparkSession, root: String, name: String,
       fromV: Option[Long] = None): Long = {
     refName(name)
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val base = fromV.getOrElse(vs.last)
-    require(vs.contains(base), s"createBranch: version $base not in $vs")
+    val Snapshot(base, dirs, meta) = snapshot(spark, root, fromV)
     require(branchVersions(spark, root, name).isEmpty,
       s"createBranch: branch '$name' already exists")
-    val (dirs, meta) = manifestOf(spark, root, base)
-    val kept = meta.filter { case (k, _) =>
-      entryHeaderDir(k).isDefined || k.startsWith("dv:") || k.startsWith("prop:") ||
-        // main-tip txn stamps seed the fork, so a staged stream's replay
-        // dedup survives a publish → drop → re-branch cadence
-        k == "txnApp" || k == "txnBatch"
-    }
+    // main-tip txn stamps seed the fork, so a staged stream's replay
+    // dedup survives a publish → drop → re-branch cadence
+    val kept = carriedHeaders(meta) ++
+      meta.filter { case (k, _) => k == "txnApp" || k == "txnBatch" }
     require(tryPublishAt(spark, root, s"b.$name.$base.commit",
         commitTsOpt(spark, root, base),
         dirs, kept + ("branch_base" -> base.toString)),
@@ -3359,11 +3206,8 @@ object VersionedTable {
     if (cs.nonEmpty && hasPartFiles(spark, root, gen))
       enforceConstraints(spark, root, cs,
         readDirs(spark, root, entries), Some(gen))
-    val keptDirs = dirs.toSet
-    val carried = bMeta.filter { case (k, _) =>
-      entryHeaderDir(k).exists(keptDirs.contains) ||
-        k.startsWith("dv:") || k.startsWith("prop:") || k == "branch_base"
-    }
+    val carried = carriedHeaders(bMeta) ++
+      bMeta.filter { case (k, _) => k == "branch_base" }
     val genStats = genStatsForEntries(spark, root, entries, statsCols)
     require(tryPublishAt(spark, root, s"b.$name.${tipB + 1}.commit",
         bMeta.get("ts").map(_.toLong), dirs ++ entries,
@@ -3407,14 +3251,8 @@ object VersionedTable {
     * of write-audit-publish: same readDirs/applyDvs machinery as main.
     */
   def readBranch(spark: SparkSession, root: String, name: String,
-      v: Option[Long] = None): DataFrame = {
-    val bvs = branchVersions(spark, root, name)
-    require(bvs.nonEmpty, s"readBranch: no branch '$name'")
-    val ver = v.getOrElse(bvs.last)
-    require(bvs.contains(ver), s"readBranch: version $ver not in $bvs")
-    val (dirs, meta) = branchManifestOf(spark, root, name, ver)
-    applyDvs(spark, root, meta, readDirs(spark, root, dirs, meta))
-  }
+      v: Option[Long] = None): DataFrame =
+    readSnapshot(spark, root, snapshot(spark, root, v, branch = Some(name)))
 
   /** PUBLISH: fast-forward main to the branch tip — ONE atomic manifest
     * rename makes every staged commit visible to production readers at
@@ -3449,10 +3287,7 @@ object VersionedTable {
     // its stamp and dedups (single app per branch — the single-writer
     // branch contract)
     val bTxn = bMeta.filter { case (k, _) => k == "txnApp" || k == "txnBatch" }
-    val bHeaders = bMeta.filter { case (k, _) =>
-      entryHeaderDir(k).isDefined || k.startsWith("dv:") ||
-        k.startsWith("prop:")
-    } ++ bTxn
+    val bHeaders = carriedHeaders(bMeta) ++ bTxn
     raceHook()
     var attempt = 0
     while (attempt < 10) {
@@ -3477,9 +3312,7 @@ object VersionedTable {
           }
         if (!clean) return None
         val (tipDirs, tipMeta) = manifestOf(spark, root, tip)
-        val tipHeaders = tipMeta.filter { case (k, _) =>
-          entryHeaderDir(k).isDefined || k.startsWith("dv:") || k.startsWith("prop:")
-        }
+        val tipHeaders = carriedHeaders(tipMeta)
         // constraints ADDED on main since the fork were never enforced
         // on the staged generations (commitToBranch gates against the
         // fork-time set): validate the staged rows against the tip's
@@ -3853,28 +3686,25 @@ object VersionedTable {
     val entries = genEntries(spark, root, gen)
     validateGeneration(spark, root, gen, entries)
     val meta = Map("txnApp" -> appId, "txnBatch" -> batchId.toString)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (attempt > 20)
-        throw new java.io.IOException(s"VersionedTable: publish contention at $root")
+    retryPublish(root) { _ =>
       val vs = versions(spark, root)
       if (absorbed(vs)) { // a racing replay won — this copy must not land
         fs(spark, root).delete(new Path(root, gen), true)
-        return (vs.last, false)
+        Some((vs.last, false))
+      } else {
+        val next = vs.lastOption.getOrElse(0L) + 1
+        // a streaming commit is an append: the shared appendCarry keeps
+        // the prior generations and their carried headers
+        val (dirs, carried) =
+          if (vs.isEmpty) (entries, Map.empty[String, String])
+          else {
+            val (prev, prevCarry) = appendCarry(spark, root, vs.last)
+            (prev ++ entries, prevCarry)
+          }
+        if (tryPublish(spark, root, next, dirs, carried ++ meta)) Some((next, true))
+        else None
       }
-      val next = vs.lastOption.getOrElse(0L) + 1
-      // a streaming commit is an append: the shared appendCarry keeps the
-      // prior generations and their stats:/dv: headers
-      val (dirs, carried) =
-        if (vs.isEmpty) (entries, Map.empty[String, String])
-        else {
-          val (prev, prevCarry) = appendCarry(spark, root, vs.last)
-          (prev ++ entries, prevCarry)
-        }
-      if (tryPublish(spark, root, next, dirs, carried ++ meta)) return (next, true)
     }
-    (-1L, false) // unreachable
   }
 
   /** Reclaim storage: delete data generations no RETAINED snapshot
@@ -4045,15 +3875,8 @@ object VersionedTable {
   /** Snapshot-isolated read of version `v` (latest when None): loads
     * exactly the manifest's directories — never a data/ listing.
     */
-  def readAt(spark: SparkSession, root: String, v: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
-    val (dirs, meta) = manifestOf(spark, root, ver)
-    applyDvs(spark, root, meta,
-      readDirs(spark, root, dirs, meta))
-  }
+  def readAt(spark: SparkSession, root: String, v: Option[Long] = None): DataFrame =
+    readSnapshot(spark, root, snapshot(spark, root, v))
 
   /** CDC / incremental consumption: the rows ADDED between two committed
     * versions, read as exactly the data generations the intervening
@@ -4171,11 +3994,7 @@ object VersionedTable {
     */
   def partitionSummary(spark: SparkSession, root: String,
       v: Option[Long] = None): Seq[(String, Int, Long)] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
-    val (dirs, meta) = manifestOf(spark, root, ver)
+    val Snapshot(_, dirs, meta) = snapshot(spark, root, v)
     // render under EVERY era's fields: after a spec evolution the
     // pre-evolution leaves still report their own tuples, not ''
     val fields = allPartitionFieldsOf(tablePropsOf(meta))
@@ -4212,11 +4031,9 @@ object VersionedTable {
     */
   def readAtPartition(spark: SparkSession, root: String, v: Option[Long],
       partSpec: String): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: no committed snapshot at $root")
-    val ver = v.getOrElse(vs.last)
-    val (field, token) = boundPartSpec(manifestMeta(spark, root, ver), partSpec)
-    val (df, _, _) = readAtPrunedPreds(spark, root, Some(ver), Nil,
+    val snap = snapshot(spark, root, v)
+    val (field, token) = boundPartSpec(snap.meta, partSpec)
+    val (df, _, _) = readPruned(spark, root, snap, Nil,
       Seq(field.name -> ((t: Option[String]) => t.contains(token))))
     partitionRows(df, field, token)
   }
@@ -4946,7 +4763,8 @@ object VersionedTable {
       commit(s, root, slice(1995), overwrite = true, statsCol = Some("yr"))
       commit(s, root, slice(1996), overwrite = false, statsCol = Some("yr"))
       commit(s, root, slice(1997), overwrite = false, statsCol = Some("yr"))
-      val (pruned, read, total) = readAtPruned(s, root, None, "yr", 1997L, 1997L)
+      val (pruned, read, total) = readAtPruned(s, root, None,
+        Seq(("yr", 1997L, 1997L)))
       def summary(step: String, df: DataFrame) = df
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("o_custkey")).as("n_cust"),
@@ -6265,9 +6083,9 @@ object VersionedTable {
           commit(s, root, part(y, low), overwrite = i == 0,
             statsCols = Seq("yr", "o_custkey"))
         }
-      val (multi, keptM, totM) = readAtPrunedMulti(s, root, None,
+      val (multi, keptM, totM) = readAtPruned(s, root, None,
         Seq(("yr", 1996L, 1996L), ("o_custkey", 1L, mid)))
-      val (_, keptS, totS) = readAtPrunedMulti(s, root, None,
+      val (_, keptS, totS) = readAtPruned(s, root, None,
         Seq(("yr", 1996L, 1996L)))
       def audit(step: String, a: Long, b: Long) =
         s.range(1).select(lit(step).as("step"), lit(a).as("a"),
@@ -6321,7 +6139,7 @@ object VersionedTable {
     * At 100 TB: a tenant/day/region predicate keeps
     * O(partition) leaf dirs out of O(table) from one bytes-sized
     * manifest read — the categorical complement of q115/q132's range
-    * skipping, composed with it by [[readAtPrunedParts]].
+    * skipping, composed with it by [[readAtPruned]].
     */
   val q133PartitionedVtable: Q = Q(
     "q133_partitioned_vtable",
@@ -6361,10 +6179,10 @@ object VersionedTable {
       // expected values derive from the data's own year spread (create's
       // plain empty generation always scans; each insert contributes one
       // leaf per distinct year it loaded)
-      val (_, keptEq, total) = readAtPrunedParts(s, table, None, Nil,
-        Seq("yr" -> Set(Option(y1.toString))))
-      val (_, keptIn, _) = readAtPrunedParts(s, table, None, Nil,
-        Seq("yr" -> Set(Option((y1 - 1).toString), Option((y1 + 1).toString))))
+      val (_, keptEq, total) = readAtPruned(s, table, None, Nil,
+        Seq("yr" -> Set(Option(y1.toString)).contains))
+      val (_, keptIn, _) = readAtPruned(s, table, None, Nil,
+        Seq("yr" -> Set(Option((y1 - 1).toString), Option((y1 + 1).toString)).contains))
       val partitioned = s.sql(s"DESCRIBE TABLE $cat.main.orders_p")
         .collect().map(_.getString(0))
         .count(_ == "# Partition Information").toLong
@@ -6531,7 +6349,7 @@ object VersionedTable {
         .select(lit("content").as("step"), col("a"), col("b"), col("c"))
       // audit the manifest-level decision the read used
       val fields = partitionFieldsOf(tableProperties(s, root))
-      val (_, kept, total) = readAtPrunedPreds(s, root, None, Nil,
+      val (_, kept, total) = readAtPruned(s, root, None, Nil,
         PartFields.prunePredicates(fields, Seq(
           org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderdate", lo),
           org.apache.spark.sql.sources.LessThanOrEqual("o_orderdate", hi))))
@@ -6976,7 +6794,7 @@ object VersionedTable {
       // one base-column range over both eras, translated per era
       val loD = mStart(1); val hiD = mEnd(4)
       val fields = allPartitionFieldsOf(tableProperties(s, root, Some(v3)))
-      val (_, kept, total) = readAtPrunedPreds(s, root, Some(v3), Nil,
+      val (_, kept, total) = readAtPruned(s, root, Some(v3), Nil,
         PartFields.prunePredicates(fields, Seq(
           org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderdate", loD),
           org.apache.spark.sql.sources.LessThanOrEqual("o_orderdate", hiD))))
@@ -7666,7 +7484,7 @@ object VersionedTable {
           sum(col("val")).cast("double").as("c"))
         .select(lit("content").as("step"), col("a"), col("b"), col("c"))
       val fields = partitionFieldsOf(tableProperties(s, root))
-      val (_, kept, total) = readAtPrunedPreds(s, root, None, Nil,
+      val (_, kept, total) = readAtPruned(s, root, None, Nil,
         PartFields.prunePredicates(fields, Seq(
           org.apache.spark.sql.sources.GreaterThanOrEqual("ts", lo),
           org.apache.spark.sql.sources.LessThanOrEqual("ts", hi))))

@@ -183,13 +183,7 @@ object VTableBroadcastHints extends Rule[LogicalPlan] {
   // a FIXED-POINT optimizer batch, so an un-hinted (big) side would
   // otherwise re-measure on every iteration of every join query; a
   // committed snapshot's size is immutable, making the memo sound.
-  private val sizeMemo =
-    new java.util.LinkedHashMap[(String, Long), java.lang.Long](
-        64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), java.lang.Long]): Boolean =
-        size() > 512
-    }
+  private val sizeMemo = new graft.ops.Lru[(String, Long), Long](512)
 
   private def tableBytes(rel: DataSourceV2Relation): Option[Long] =
     rel.table match {
@@ -198,17 +192,11 @@ object VTableBroadcastHints extends Rule[LogicalPlan] {
           val spark = SparkSession.active
           val ver = t.tableVersion.getOrElse(
             VersionedTable.versions(spark, t.tablePath).last)
-          val key = (t.tablePath, ver)
-          sizeMemo.synchronized(Option(sizeMemo.get(key)))
-            .map(_.longValue)
-            .orElse {
-              val (bytes, _, _) = VersionedTable.scanSizeBytes(
-                spark, t.tablePath, Some(ver), Nil, Nil)
-              sizeMemo.synchronized {
-                sizeMemo.put(key, java.lang.Long.valueOf(bytes))
-              }
-              Some(bytes)
-            }
+          Some(sizeMemo.getOrElseUpdate((t.tablePath, ver)) {
+            val (bytes, _, _) = VersionedTable.scanSizeBytes(
+              spark, t.tablePath, Some(ver), Nil, Nil)
+            bytes
+          })
         } catch { case scala.util.control.NonFatal(_) => None }
       case _ => None
     }

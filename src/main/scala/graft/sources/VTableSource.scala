@@ -422,7 +422,7 @@ object VTableScans {
     * `pruneCol` lists prune CONJUNCTIVELY: every listed column with a
     * non-trivial filter window contributes, so a time×tenant predicate
     * keeps only the generations inside BOTH ranges
-    * ([[VersionedTable.readAtPrunedMulti]]). Declared PARTITION fields
+    * ([[VersionedTable.readAtPruned]]). Declared PARTITION fields
     * prune the same way from pushed predicates on their BASE columns —
     * equality/IN/IS NULL for every transform, ranges where the
     * transform is order-preserving (days/months/truncate): the
@@ -463,7 +463,7 @@ object VTableScans {
     val base =
       if (windows.isEmpty && partPreds.isEmpty)
         VersionedTable.readAt(spark, path, version)
-      else VersionedTable.readAtPrunedPreds(spark, path, version,
+      else VersionedTable.readAtPruned(spark, path, version,
         windows, partPreds)._1
     val filtered = filters.flatMap(toPredicate).foldLeft(base)(_.filter(_))
     filtered.select(requiredColumns.map(col): _*)

@@ -113,9 +113,9 @@ class ManifestFileStatsSpec extends SparkSpec {
     // a narrow window keeps 1-2 of the 8 files; result matches the
     // unpruned filter exactly (the oracle) and the estimate shrinks
     val (full, _, _) = VersionedTable.readAtPruned(spark, t, None,
-      "k", Long.MinValue, Long.MaxValue)
+      Seq(("k", Long.MinValue, Long.MaxValue)))
     val (pruned, keptGen, totalGen) = VersionedTable.readAtPruned(
-      spark, t, None, "k", 1000L, 1400L)
+      spark, t, None, Seq(("k", 1000L, 1400L)))
     assert(keptGen == 1 && totalGen == 1, "generation-level keeps the gen")
     val expect = full.filter(col("k").between(1000, 1400))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq

@@ -97,7 +97,7 @@ class PartFieldsSpec extends SparkSpec {
     // RANGE on the base timestamp prunes day leaves (drops the null leaf
     // too — no NULL matches a range); equality keeps exactly one day
     def kept(filters: Filter*): Int =
-      VersionedTable.readAtPrunedPreds(spark, root, None, Nil,
+      VersionedTable.readAtPruned(spark, root, None, Nil,
         PartFields.prunePredicates(fields, filters.toIndexedSeq))._2
     assert(kept(GreaterThanOrEqual("ts", ts("2026-01-02T00:00:00Z"))) == 1)
     assert(kept(LessThan("ts", ts("2026-01-02T00:00:00Z"))) == 2,
@@ -141,7 +141,7 @@ class PartFieldsSpec extends SparkSpec {
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
     def kept(filters: Filter*): Int =
-      VersionedTable.readAtPrunedPreds(spark, root, None, Nil,
+      VersionedTable.readAtPruned(spark, root, None, Nil,
         PartFields.prunePredicates(fields, filters.toIndexedSeq))._2
     assert(kept(GreaterThanOrEqual("ts", ts("2026-01-01T11:00:00Z"))) == 2)
     assert(kept(LessThan("ts", ts("2026-01-01T11:00:00Z"))) == 2,
@@ -209,7 +209,7 @@ class PartFieldsSpec extends SparkSpec {
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
     def kept(filters: Filter*): Int =
-      VersionedTable.readAtPrunedPreds(spark, root, None, Nil,
+      VersionedTable.readAtPruned(spark, root, None, Nil,
         PartFields.prunePredicates(fields, filters.toIndexedSeq))._2
     // month ranges: >= 1995-02-01 keeps feb, mar, 1996-jan (3 of 4)
     assert(kept(GreaterThanOrEqual("d", d("1995-02-01"))) == 3)
@@ -251,7 +251,7 @@ class PartFieldsSpec extends SparkSpec {
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
     def kept(filters: Filter*): Int =
-      VersionedTable.readAtPrunedPreds(spark, root, None, Nil,
+      VersionedTable.readAtPruned(spark, root, None, Nil,
         PartFields.prunePredicates(fields, filters.toIndexedSeq))._2
     assert(kept(GreaterThanOrEqual("dt", d("1996-01-01"))) == 2)
     assert(kept(LessThan("dt", d("1996-06-01"))) == 2,
@@ -286,7 +286,7 @@ class PartFieldsSpec extends SparkSpec {
       VersionedTable.tableProperties(spark, root))
     val preds = PartFields.prunePredicates(fields,
       Seq(GreaterThanOrEqual("ts", ts("2026-03-02T00:00:00Z"))))
-    val (got, kept, total) = VersionedTable.readAtPrunedPreds(spark, root,
+    val (got, kept, total) = VersionedTable.readAtPruned(spark, root,
       None, Nil, preds)
     assert(total == 2 && kept == 1, s"kept $kept of $total")
     assert(got.filter(col("ts") >= lit(ts("2026-03-02T00:00:00Z")))
@@ -316,7 +316,7 @@ class PartFieldsSpec extends SparkSpec {
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
     def keptOf(filters: Filter*): (Int, Int, Set[Long]) = {
-      val (got, kept, total) = VersionedTable.readAtPrunedPreds(spark, root,
+      val (got, kept, total) = VersionedTable.readAtPruned(spark, root,
         None, Nil, PartFields.prunePredicates(fields, filters.toIndexedSeq))
       (kept, total, got.collect().map(_.getLong(0)).toSet)
     }
@@ -345,7 +345,7 @@ class PartFieldsSpec extends SparkSpec {
       .contains("__p_id_bucket=__HIVE_DEFAULT_PARTITION__"))
     val f2 = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root2))
-    val (got2, kept2, _) = VersionedTable.readAtPrunedPreds(spark, root2,
+    val (got2, kept2, _) = VersionedTable.readAtPruned(spark, root2,
       None, Nil, PartFields.prunePredicates(f2, Seq(IsNull("id"))))
     assert(kept2 == 1 && got2.filter(col("id").isNull).count() == 1)
   }
@@ -375,7 +375,7 @@ class PartFieldsSpec extends SparkSpec {
     val fields = VersionedTable.allPartitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
     assert(fields.map(_.spec) == Seq("months(d)", "days(d)"))
-    val (got, kept, total) = VersionedTable.readAtPrunedPreds(spark, root,
+    val (got, kept, total) = VersionedTable.readAtPruned(spark, root,
       None, Nil, PartFields.prunePredicates(fields, Seq(
         GreaterThanOrEqual("d", day("2024-02-01")),
         LessThanOrEqual("d", day("2024-04-30")))))
@@ -435,7 +435,7 @@ class PartFieldsSpec extends SparkSpec {
     assert(sum2.contains(""), sum2.mkString(","))        // plain new entry
     val f2 = VersionedTable.allPartitionFieldsOf(
       VersionedTable.tableProperties(spark, root2))
-    val (g2, k2, t2) = VersionedTable.readAtPrunedPreds(spark, root2, None,
+    val (g2, k2, t2) = VersionedTable.readAtPruned(spark, root2, None,
       Nil, PartFields.prunePredicates(f2, Seq(EqualTo("code", "ab"))))
     assert(k2 < t2 && g2.filter(col("code") === "ab").count() == 1)
   }
@@ -516,7 +516,7 @@ class PartFieldsSpec extends SparkSpec {
       Map("partition" -> "truncate(10,v)")))
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, root))
-    val (got, kept, total) = VersionedTable.readAtPrunedPreds(spark, root,
+    val (got, kept, total) = VersionedTable.readAtPruned(spark, root,
       None, Nil, PartFields.prunePredicates(fields,
         Seq(LessThanOrEqual("v", edge + 9))))
     assert(kept < total, "upper-bound range should prune the high leaves")

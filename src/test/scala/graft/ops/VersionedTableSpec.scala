@@ -475,7 +475,7 @@ class VersionedTableSpec extends SparkSpec {
     def filesOf(d: org.apache.spark.sql.DataFrame) = d.inputFiles.toSet
     // [10,19] overlaps only gen2; gen3 (no stats) is kept conservatively
     val (pruned, read, total) =
-      VersionedTable.readAtPruned(spark, root, None, "id", 12L, 15L)
+      VersionedTable.readAtPruned(spark, root, None, Seq(("id", 12L, 15L)))
     assert(read == 2 && total == 3)
     // generation-level keeps gen2 ([10,19] intersects [12,15]), but the
     // per-FILE records (r18) prove each of its one-row files is outside
@@ -486,21 +486,21 @@ class VersionedTableSpec extends SparkSpec {
     assert(filesOf(pruned).subsetOf(allFiles) && filesOf(pruned) != allFiles)
     // stats headers carry forward across appends: gen1's bounds are
     // still usable at v3 even though they were recorded at v1
-    val (one, r1, _) = VersionedTable.readAtPruned(spark, root, Some(v3), "id", 1L, 5L)
+    val (one, r1, _) = VersionedTable.readAtPruned(spark, root, Some(v3), Seq(("id", 1L, 5L)))
     assert(r1 == 2, "gen1 (stats hit) + gen3 (no stats)")
     assert(one.collect().map(_.getInt(0)).toSet == Set(1, 5, 100))
     // a window no stats-carrying generation intersects reads only the
     // conservative no-stats generation
-    val (none, r0, _) = VersionedTable.readAtPruned(spark, root, None, "id", 50L, 60L)
+    val (none, r0, _) = VersionedTable.readAtPruned(spark, root, None, Seq(("id", 50L, 60L)))
     assert(r0 == 1 && none.collect().map(_.getInt(0)).toSet == Set(100))
     // stats for an UNRECORDED column prune nothing
-    assert(VersionedTable.readAtPruned(spark, root, None, "nope", 0L, 0L)._2 == 3)
+    assert(VersionedTable.readAtPruned(spark, root, None, Seq(("nope", 0L, 0L)))._2 == 3)
     // an overwrite drops every older generation's stats with the dirs
     val v4 = VersionedTable.commit(spark, root, gen(7), overwrite = true,
       statsCol = Some("id"))
     val meta4 = VersionedTable.manifestMeta(spark, root, v4)
     assert(meta4.keys.count(_.startsWith("stats:")) == 1)
-    val (_, r4, t4) = VersionedTable.readAtPruned(spark, root, None, "id", 7L, 7L)
+    val (_, r4, t4) = VersionedTable.readAtPruned(spark, root, None, Seq(("id", 7L, 7L)))
     assert(r4 == 1 && t4 == 1)
   }
 
@@ -519,15 +519,15 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.mergeInto(spark, root, kv(90 -> 13, 95 -> 13), "id",
       statsCol = Some("id"))
       .getOrElse(fail("merge must publish"))
-    val (m, rm, tm) = VersionedTable.readAtPruned(spark, root, None, "id", 20L, 25L)
+    val (m, rm, tm) = VersionedTable.readAtPruned(spark, root, None, Seq(("id", 20L, 25L)))
     assert(rm == 1 && tm == 3, "carried stats still prune after a merge")
     assert(m.collect().map(_.getInt(0)).toSet == Set(20, 25))
     // the merged generation's own re-recorded bounds prune too
-    assert(VersionedTable.readAtPruned(spark, root, None, "id", 90L, 99L)._2 == 1)
+    assert(VersionedTable.readAtPruned(spark, root, None, Seq(("id", 90L, 99L)))._2 == 1)
     // delete from the low generation: untouched stats carried again
     VersionedTable.deleteWhere(spark, root, col("id") === 1,
       statsCol = Some("id")).getOrElse(fail("delete must publish"))
-    assert(VersionedTable.readAtPruned(spark, root, None, "id", 20L, 25L)._2 == 1)
+    assert(VersionedTable.readAtPruned(spark, root, None, Seq(("id", 20L, 25L)))._2 == 1)
     // compaction replaces every generation; statsCol re-records bounds
     // for the single compacted generation so skipping keeps working for
     // post-compaction appends
@@ -535,7 +535,7 @@ class VersionedTableSpec extends SparkSpec {
       .getOrElse(fail("compact must publish"))
     VersionedTable.commit(spark, root, kv(500 -> 14), overwrite = false,
       statsCol = Some("id"))
-    val (hot, rh, th) = VersionedTable.readAtPruned(spark, root, None, "id", 400L, 600L)
+    val (hot, rh, th) = VersionedTable.readAtPruned(spark, root, None, Seq(("id", 400L, 600L)))
     assert(rh == 1 && th == 2,
       "a recent-window read skips the compacted cold generation")
     assert(hot.collect().map(_.getInt(0)).toSet == Set(500))
@@ -1446,8 +1446,8 @@ class VersionedTableSpec extends SparkSpec {
     // partition + stats pruning compose; full content preserved
     assert(rows() == Set((1, "a", 10), (2, "b", 20), (3, "b", 30),
       (4, "c", 40)))
-    val (pb, keptB, totB) = VersionedTable.readAtPrunedParts(spark, root,
-      None, Seq(("v", 25L, 45L)), Seq("grp" -> Set(Option("b"))))
+    val (pb, keptB, totB) = VersionedTable.readAtPruned(spark, root,
+      None, Seq(("v", 25L, 45L)), Seq("grp" -> Set(Option("b")).contains))
     // v2's b-leaf passes both dimensions; v1's b-leaf has NO stats (v1
     // committed without statsCol) so the window cannot exclude it —
     // stats absence means "must scan", never "prune"
@@ -1661,12 +1661,12 @@ class VersionedTableSpec extends SparkSpec {
     // the recorded windows actually prune: v outside [25, 35] keeps one
     // leaf (plus the stats-free create generation, which must scan)
     val (pruned, kept, total) = VersionedTable.readAtPruned(spark, root,
-      None, "v", 25L, 35L)
+      None, Seq(("v", 25L, 35L)))
     assert(total == 4 && kept == 2, s"kept $kept of $total")
     assert(pruned.filter(col("v") >= 25 && col("v") <= 35).count() == 1)
     // equality pruning on the escaped values keeps exactly their leaf
-    val (_, keptEq, _) = VersionedTable.readAtPrunedParts(spark, root,
-      None, Nil, Seq("grp" -> Set(Option("50% off"))))
+    val (_, keptEq, _) = VersionedTable.readAtPruned(spark, root,
+      None, Nil, Seq("grp" -> Set(Option("50% off")).contains))
     assert(keptEq == 2, s"the escaped leaf plus the create gen: $keptEq")
   }
 
@@ -1877,5 +1877,81 @@ class VersionedTableSpec extends SparkSpec {
       .map(_.getInt(0)).toSet == Set(1, 50))
     assert(VersionedTable.fastForward(spark, root4, "g").isEmpty,
       "gapped history must abort the publish")
+  }
+
+  test("every metadata-only tip edit keeps the entries, their stats and dv headers, and the rows") {
+    import spark.implicits._
+    val root = freshRoot()
+    assert(VersionedTable.createIfAbsent(spark, root,
+      Seq((1, 10, "a", "x"), (2, 20, "b", "x")).toDF("id", "v", "note", "grp"),
+      Map("owner" -> "etl")))
+    VersionedTable.commit(spark, root,
+      Seq((3, 30, "c", "y"), (4, 40, "d", "y")).toDF("id", "v", "note", "grp"),
+      overwrite = false, statsCols = Seq("id", "v"))
+    VersionedTable.deleteWhereMor(spark, root, col("id") === 2, "id")
+    // the headers a metadata-only commit must carry: entry-scoped stats
+    // and per-file records, and the merge-on-read tombstones
+    def carriedKinds(v: Long): Map[String, String] =
+      VersionedTable.manifestMeta(spark, root, v).filter { case (k, _) =>
+        Seq("stats:", "files:", "fstats:", "dv:").exists(k.startsWith)
+      }
+    val setupTip = VersionedTable.versions(spark, root).last
+    assert(carriedKinds(setupTip).keys.exists(_.startsWith("stats:")) &&
+      carriedKinds(setupTip).keys.exists(_.startsWith("dv:")))
+    // every column as a string, by position, minus the named columns
+    def rowsAt(v: Long, without: String*): Set[Seq[String]] = {
+      val d = VersionedTable.readAt(spark, root, Some(v))
+      d.select(d.columns.filterNot(without.contains).map(c => col(c).cast("string")): _*)
+        .collect().map(_.toSeq.map(String.valueOf)).toSet
+    }
+    val edits: Seq[(String, Seq[String], () => Long)] = Seq(
+      ("setProperties", Nil,
+        () => VersionedTable.setProperties(spark, root, Map("tier" -> "gold"))),
+      ("renameColumn", Nil,
+        () => VersionedTable.renameColumn(spark, root, "v", "w")),
+      ("widenColumnType", Nil, () => VersionedTable.widenColumnType(spark, root,
+        "w", org.apache.spark.sql.types.LongType)),
+      ("dropColumn", Seq("note"),
+        () => VersionedTable.dropColumn(spark, root, "note")),
+      ("evolvePartitionSpec", Nil,
+        () => VersionedTable.evolvePartitionSpec(spark, root, "grp")),
+      ("tagVersion", Nil, () => VersionedTable.tagVersion(spark, root, "rel1")),
+      ("deleteTag", Nil, () => VersionedTable.deleteTag(spark, root, "rel1")))
+    val last = edits.foldLeft(setupTip) { case (prev, (name, dropped, edit)) =>
+      val next = edit()
+      withClue(s"$name: ") {
+        assert(next == prev + 1)
+        assert(VersionedTable.manifestDirs(spark, root, next) ==
+          VersionedTable.manifestDirs(spark, root, prev))
+        val after = VersionedTable.manifestMeta(spark, root, next)
+        carriedKinds(prev).foreach { case (k, value) =>
+          assert(after.get(k).contains(value), s"lost header $k")
+        }
+        assert(VersionedTable.tableProperties(spark, root, Some(next))
+          .get("owner").contains("etl"))
+        assert(rowsAt(next) == rowsAt(prev, dropped: _*))
+      }
+      next
+    }
+    assert(last == setupTip + edits.size)
+    assert(idsAt(root) == Set(1, 3, 4), "the tombstoned id stays hidden")
+  }
+
+  test("snapshot reads reject an uncommitted version as an illegal argument") {
+    val root = freshRoot()
+    VersionedTable.commit(spark, root, df(1, 2), overwrite = true)
+    val missing = Some(99L)
+    Seq[(String, () => Any)](
+      "readAt" -> (() => VersionedTable.readAt(spark, root, missing)),
+      "tableProperties" -> (() => VersionedTable.tableProperties(spark, root, missing)),
+      "partitionSummary" -> (() => VersionedTable.partitionSummary(spark, root, missing)),
+      "filesSummary" -> (() => VersionedTable.filesSummary(spark, root, missing)),
+      "readAtPartition" ->
+        (() => VersionedTable.readAtPartition(spark, root, missing, "id=1")),
+      "scanSizeBytes" ->
+        (() => VersionedTable.scanSizeBytes(spark, root, missing, Nil, Nil))
+    ).foreach { case (name, read) =>
+      withClue(s"$name: ")(intercept[IllegalArgumentException](read()))
+    }
   }
 }

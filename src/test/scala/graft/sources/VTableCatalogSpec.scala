@@ -115,14 +115,14 @@ class VTableCatalogSpec extends SparkSpec {
     // leaves (+ always-scan plain gens) and returns exactly the filtered
     // rows; the audit uses the engine API with the same translated shape
     assert(ids("SELECT id FROM vtcat.pby.t WHERE grp = 'b'") == Set(3, 4))
-    val (prunedDf, kept, total) = VersionedTable.readAtPrunedParts(spark,
-      path, None, Nil, Seq("grp" -> Set(Option("b"))))
+    val (prunedDf, kept, total) = VersionedTable.readAtPruned(spark,
+      path, None, Nil, Seq("grp" -> Set(Option("b")).contains))
     assert(total == 6 && kept == 3, // create's plain gen + one 'b' leaf per insert
       s"expected 3 of 6 entries kept, got $kept of $total")
     assert(prunedDf.filter(col("grp") === "b").count() == 2)
     // IS NULL keeps only the default-partition leaves (+ plain gens)
-    val (_, keptN, _) = VersionedTable.readAtPrunedParts(spark,
-      path, None, Nil, Seq("grp" -> Set(Option.empty[String])))
+    val (_, keptN, _) = VersionedTable.readAtPruned(spark,
+      path, None, Nil, Seq("grp" -> Set(Option.empty[String]).contains))
     assert(keptN == 2, s"NULL prune kept $keptN")
     // DESCRIBE surfaces the declared partitioning
     val desc = spark.sql("DESCRIBE TABLE vtcat.pby.t").collect()
@@ -205,7 +205,7 @@ class VTableCatalogSpec extends SparkSpec {
     // create carrier), the >= predicate keeps the two later days
     val fields = VersionedTable.partitionFieldsOf(
       VersionedTable.tableProperties(spark, s"$root/hp/t"))
-    val (_, kept, total) = VersionedTable.readAtPrunedPreds(spark,
+    val (_, kept, total) = VersionedTable.readAtPruned(spark,
       s"$root/hp/t", None, Nil,
       graft.ops.PartFields.prunePredicates(fields,
         Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("ts",

@@ -179,7 +179,7 @@ class VTableSourceSpec extends SparkSpec {
     VersionedTable.commit(spark, root, grid(10 to 19, 5 to 9),
       overwrite = false, statsCols = Seq("ts", "tenant"))
     // conjunctive windows keep exactly ONE generation...
-    val (_, kept, total) = VersionedTable.readAtPrunedMulti(spark, root,
+    val (_, kept, total) = VersionedTable.readAtPruned(spark, root,
       None, Seq(("ts", 10L, 12L), ("tenant", 7L, 7L)))
     assert((kept, total) == (1, 4))
     // ...and the public reader drives the same prune from pushed filters
@@ -190,7 +190,7 @@ class VTableSourceSpec extends SparkSpec {
     assert(got == (10 to 12).map(_ -> 7).toSet,
       "pruning never changes results")
     // a filter on only one listed column still prunes on that dimension
-    val (_, keptS, _) = VersionedTable.readAtPrunedMulti(spark, root,
+    val (_, keptS, _) = VersionedTable.readAtPruned(spark, root,
       None, Seq(("ts", 10L, 12L)))
     assert(keptS == 2)
   }
