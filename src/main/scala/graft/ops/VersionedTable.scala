@@ -21,16 +21,16 @@ import Q.t
   * Each manifest lists the data directories (relative paths, one per
   * line) that constitute snapshot N — append commits carry the previous
   * list plus the new generation, overwrite commits carry only the new
-  * one. The COMMIT POINT is the atomic rename of a hidden temp file to
-  * `_log/<N>.commit`: data files are written first and are invisible
-  * until the manifest appears, so a crash anywhere before the rename
+  * one. The COMMIT POINT is the atomic create-if-absent of
+  * `_log/<N>.commit` from a hidden temp file (a hard link on the local
+  * filesystem, a rename elsewhere): data files are written first and are
+  * invisible until the manifest appears, so a crash anywhere before it
   * leaves only orphaned (unreferenced, reclaimable) data and the prior
   * snapshot intact — the same only-the-driver-publishes atomicity the
   * `graft-audit` DSv2 sink demonstrates, applied to a table. Concurrent
-  * writers are safe by OPTIMISTIC CONCURRENCY: rename onto an existing
-  * manifest fails (Hadoop semantics — returns false rather than
-  * overwriting), the loser re-reads the log and retries at N+1, so
-  * version history is linear.
+  * writers are safe by OPTIMISTIC CONCURRENCY: creating an existing
+  * manifest fails, and the loser aborts or rebases onto the new tip as
+  * its rebase policy allows, so version history is linear.
   *
   * Readers never list `data/` (at scale a blob listing is slow and,
   * worse, sees half-written generations): they read the manifest and
@@ -111,6 +111,9 @@ object VersionedTable {
   private final case class Snapshot(v: Long, dirs: Seq[String],
       meta: Map[String, String])
 
+  // the base of a table's first commit: version 0, no entries, no headers
+  private val NoSnapshot = Snapshot(0L, Nil, Map.empty)
+
   // THE snapshot resolver every versioned read and ref goes through: one
   // log listing, the version check, one manifest open. `v` None = the tip;
   // `branch` resolves against that branch's log instead of main's.
@@ -119,11 +122,26 @@ object VersionedTable {
     val vs = branch.fold(versions(spark, root))(branchVersions(spark, root, _))
     require(vs.nonEmpty, branch.fold(
       s"VersionedTable: no committed snapshot at $root")(b => s"readBranch: no branch '$b'"))
+    snapshotIn(spark, root, vs, v, branch)
+  }
+
+  // the resolver's version check and manifest open, against a listing the
+  // caller already holds
+  private def snapshotIn(spark: SparkSession, root: String, vs: Seq[Long],
+      v: Option[Long], branch: Option[String] = None): Snapshot = {
     val ver = v.getOrElse(vs.last)
     require(vs.contains(ver), s"VersionedTable: version $ver not in $vs")
     val (dirs, meta) = manifestFileOf(spark, root,
       branch.fold(s"$ver.commit")(b => s"b.$b.$ver.commit"))
     Snapshot(ver, dirs, meta)
+  }
+
+  // the tip of a table an operation requires to exist (`what` names the
+  // operation in the refusal)
+  private def tipFor(spark: SparkSession, root: String, what: String): Snapshot = {
+    val vs = versions(spark, root)
+    require(vs.nonEmpty, s"VersionedTable: nothing to $what at $root")
+    snapshotIn(spark, root, vs, None)
   }
 
   // a resolved snapshot's rows: its entries read by name, minus the rows
@@ -140,20 +158,19 @@ object VersionedTable {
     * shift `TIMESTAMP AS OF`, `startingTimestamp` and timestamp vacuum
     * if they resolved through the filesystem (the Delta in-commit-
     * timestamp rationale). Pre-header manifests (older tables) fall
-    * back to the manifest file's mtime — the atomic rename IS the
-    * commit point, so absent tampering the mtime is the publish time.
+    * back to the manifest file's mtime — the manifest is written just
+    * before its atomic create, so absent tampering the mtime is the
+    * publish time.
     */
   def commitTimestamp(spark: SparkSession, root: String, v: Long): Long =
-    manifestMeta(spark, root, v).get("ts").map(_.toLong).getOrElse(
+    tsOf(spark, root, v, snapshot(spark, root, Some(v)).meta)
+
+  // a listed version's commit time from its headers: `#ts=`, else mtime
+  private def tsOf(spark: SparkSession, root: String, v: Long,
+      meta: Map[String, String]): Long =
+    meta.get("ts").map(_.toLong).getOrElse(
       fs(spark, root).getFileStatus(new Path(root, s"_log/$v.commit"))
         .getModificationTime * 1000L)
-
-  // commitTimestamp when the manifest may be absent (vacuum-trimmed
-  // predecessor) — the monotonicity floor lookup must not throw
-  private def commitTsOpt(spark: SparkSession, root: String,
-      v: Long): Option[Long] =
-    if (!fs(spark, root).exists(new Path(root, s"_log/$v.commit"))) None
-    else Some(commitTimestamp(spark, root, v))
 
   /** Newest committed version published at or before `tsMicros` (epoch
     * micros — the Spark `TIMESTAMP AS OF` contract). None when the
@@ -162,8 +179,16 @@ object VersionedTable {
   def versionAsOfTimestamp(spark: SparkSession, root: String,
       tsMicros: Long): Option[Long] =
     versions(spark, root)
-      .filter(v => commitTimestamp(spark, root, v) <= tsMicros)
+      .filter(v => tsOf(spark, root, v, manifestMeta(spark, root, v)) <= tsMicros)
       .lastOption
+
+  /** Oldest committed version published at or after `tsMicros` (the
+    * `startingTimestamp` contract). None when every commit predates it.
+    */
+  def versionAtOrAfterTimestamp(spark: SparkSession, root: String,
+      tsMicros: Long): Option[Long] =
+    versions(spark, root)
+      .find(v => tsOf(spark, root, v, manifestMeta(spark, root, v)) >= tsMicros)
 
   /** Commit metadata: the `#key=value` manifest headers (commit kind,
     * streaming transaction stamps). Empty for plain commits.
@@ -237,8 +262,7 @@ object VersionedTable {
   // partition fields in force at the tip (empty for fresh/unpartitioned)
   private def partitionFieldsAt(spark: SparkSession, root: String): Seq[PartField] =
     versions(spark, root).lastOption.map { v =>
-      partitionFieldsOf(propHeaders(spark, root, v)
-        .map { case (k, value) => k.stripPrefix("prop:") -> value })
+      partitionFieldsOf(tablePropsOf(manifestMeta(spark, root, v)))
     }.getOrElse(Nil)
 
   // does `rel` (or any partition subdir of it) hold a footer-bearing file?
@@ -500,35 +524,127 @@ object VersionedTable {
     gen
   }
 
-  // THE commit point: atomic publish of version v; false means another
-  // writer took v (optimistic-concurrency loss) and the temp was
-  // discarded. Every publish stamps the IN-COMMIT timestamp (`#ts=`
-  // epoch micros) — clamped to strictly after the predecessor's so the
-  // version order and the timestamp order can never disagree even
-  // under clock skew (versionAsOfTimestamp's "newest at-or-before"
-  // scan assumes monotone stamps).
-  private def tryPublish(spark: SparkSession, root: String, v: Long,
-      dirs: Seq[String], meta: Map[String, String]): Boolean =
-    tryPublishAt(spark, root, s"$v.commit",
-      commitTsOpt(spark, root, v - 1), dirs, meta)
+  /** How a publish that lost its version to another writer may land past
+    * the commits that took it. */
+  private sealed trait Rebase
 
-  // the shared publish mechanism, parameterized by target manifest file —
-  // main-log commits and branch-log commits are the same atomic rename,
-  // just under different names (branch files never match CommitRe, so
-  // main readers cannot see them)
-  private def tryPublishAt(spark: SparkSession, root: String,
-      file: String, prevTs: Option[Long],
-      dirs: Seq[String], meta: Map[String, String]): Boolean = {
+  /** Never: publish only at base+1, and a loss aborts. For commits whose
+    * content baked in the base snapshot — compact, compactSmall,
+    * optimize, optimizePartition, deleteWhere, deleteWhereMor, restore,
+    * createIfAbsent and the branch commits; landing later could silently
+    * undo or drop a concurrent writer's commit. */
+  private case object AtBase extends Rebase
+
+  /** Always: the manifest is rebuilt on each new tip — for commits whose
+    * intent does not depend on what landed meanwhile (`commit`,
+    * `idempotentCommit`, `editTip`). Losing every attempt throws
+    * `publish contention`. */
+  private case object PastAny extends Rebase
+
+  /** Only when `ok` accepts every intervening commit (a logical-conflict
+    * check: `publishRowLevel`, `fastForward`, `overwritePartitions`); a
+    * refusal, a vacuumed gap above the base or losing every attempt
+    * aborts. */
+  private final case class PastIf(ok: Intervening => Boolean) extends Rebase
+
+  // one commit a rebase lands past: its predecessor's entries, its own
+  // snapshot and its kind (txn suffix dropped), each resolved once
+  private final case class Intervening(prevDirs: Seq[String], snap: Snapshot,
+      kind: String) {
+    def added: Seq[String] = snap.dirs.filterNot(prevDirs.contains)
+    def removed: Seq[String] = prevDirs.filterNot(snap.dirs.contains)
+  }
+
+  private val PublishAttempts = 20
+
+  // THE publish primitive: every `_log` manifest, main or branch, lands
+  // here. Each attempt builds the manifest on `on` (first the caller's
+  // `base`, or for PastIf the newest tip its check accepts; after a loss
+  // the new tip, as `rebase` allows), stamps the IN-COMMIT timestamp
+  // (`#ts=` epoch micros, clamped strictly after `on`'s so version order
+  // and timestamp order never disagree under clock skew) and creates
+  // manifest `file(on.v + 1)` iff absent. Returns the published snapshot,
+  // or None when it aborted or `manifest` gave up (returned None); an
+  // abort, None or the contention error, deletes the generations this
+  // call wrote (`wrote`).
+  private def publish(spark: SparkSession, root: String, base: Snapshot,
+      wrote: Seq[String], rebase: Rebase,
+      file: Long => String = v => s"$v.commit")(
+      manifest: Snapshot => Option[(Seq[String], Map[String, String])])
+      : Option[Snapshot] = {
     val hfs = fs(spark, root)
-    val now = System.currentTimeMillis() * 1000L
-    val ts = math.max(now, prevTs.map(_ + 1L).getOrElse(Long.MinValue))
-    val stamped = meta + ("ts" -> ts.toString)
+    def reclaim(): Unit = wrote.foreach(g => hfs.delete(new Path(root, g), true))
+    // the commits past `on`, each resolved once; the last of them when
+    // `ok` accepts them all and the log above `on` has no gap
+    def rebased(on: Snapshot, ok: Intervening => Boolean): Option[Snapshot] = {
+      val past = versions(spark, root).filter(_ > on.v)
+      if (past != (on.v + 1 to on.v + past.size)) None
+      else past.foldLeft(Option(on)) { (prev, v) =>
+        prev.flatMap { p =>
+          val (dirs, meta) = manifestOf(spark, root, v)
+          val snap = Snapshot(v, dirs, meta)
+          val kind = kindOf(Some(p.dirs), dirs, meta).stripSuffix("+txn")
+          Option.when(ok(Intervening(p.dirs, snap, kind)))(snap)
+        }
+      }
+    }
+    @annotation.tailrec
+    def attempt(n: Int, on: Snapshot): Option[Snapshot] = manifest(on) match {
+      case None => None
+      case Some((dirs, meta)) =>
+        val floor = on.meta.get("ts").fold(Long.MinValue)(_.toLong + 1L)
+        val stamped = meta +
+          ("ts" -> math.max(System.currentTimeMillis() * 1000L, floor).toString)
+        if (createManifest(hfs, root, file(on.v + 1), dirs, stamped))
+          Some(Snapshot(on.v + 1, dirs, stamped))
+        else (rebase, n < PublishAttempts) match {
+          case (PastAny, false) =>
+            reclaim()
+            throw new java.io.IOException(s"VersionedTable: publish contention at $root")
+          case (PastAny, true) => attempt(n + 1, snapshot(spark, root, None))
+          case (PastIf(ok), true) => rebased(on, ok) match {
+            case Some(tip) => attempt(n + 1, tip)
+            case None => None
+          }
+          case _ => None
+        }
+    }
+    // a conditional rebase first checks what landed past the base before
+    // it publishes (the base need not be the tip: a fork point is not)
+    val first = rebase match {
+      case PastIf(ok) => rebased(base, ok)
+      case _ => Some(base)
+    }
+    first.flatMap(attempt(1, _)).orElse { reclaim(); None }
+  }
+
+  // THE commit point: create `_log/<file>` iff absent, atomically; false
+  // means another writer took it. The manifest is written to a hidden
+  // temp file first. On the local filesystem the temp is HARD-LINKED to
+  // the target — `link(2)` fails when the target exists — because
+  // `RawLocalFileSystem.rename` is a POSIX rename that REPLACES an
+  // existing target (and the `file:` wrapper some jars register only
+  // checks before it renames); elsewhere the rename's refusal of an
+  // existing target is the commit point.
+  private def createManifest(hfs: org.apache.hadoop.fs.FileSystem,
+      root: String, file: String, dirs: Seq[String],
+      meta: Map[String, String]): Boolean = {
     val tmp = new Path(root, s"_log/.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val lines = stamped.toSeq.sortBy(_._1).map { case (k, value) => s"#$k=$value" } ++ dirs
+    val dst = new Path(root, s"_log/$file")
+    val lines = meta.toSeq.sortBy(_._1).map { case (k, value) => s"#$k=$value" } ++ dirs
     val out = hfs.create(tmp, false)
     try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (hfs.rename(tmp, new Path(root, s"_log/$file"))) true
-    else { hfs.delete(tmp, false); false }
+    val local: Option[Path => java.io.File] = hfs match {
+      case l: org.apache.hadoop.fs.LocalFileSystem => Some(l.pathToFile)
+      case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(r.pathToFile)
+      case _ => None
+    }
+    val won = local.fold(hfs.rename(tmp, dst)) { file =>
+      try { java.nio.file.Files.createLink(file(dst).toPath, file(tmp).toPath); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    }
+    if (local.isDefined || !won) hfs.delete(tmp, false)
+    won
   }
 
   // manifest header key carrying one generation's [min,max] for one
@@ -651,9 +767,6 @@ object VersionedTable {
   private def dvHeadersOf(meta: Map[String, String]): Map[String, String] =
     meta.filter { case (k, _) => k.startsWith("dv:") }
 
-  private def dvHeaders(spark: SparkSession, root: String, v: Long): Map[String, String] =
-    dvHeadersOf(manifestMeta(spark, root, v))
-
   /** Outstanding merge-on-read deletion vectors at a snapshot? The
     * metadata-aggregate gate: footer row counts include logically
     * deleted rows, so a snapshot with live `dv:` tombstones must never
@@ -662,7 +775,8 @@ object VersionedTable {
   def hasDeletionVectors(spark: SparkSession, root: String,
       v: Option[Long] = None): Boolean = {
     val vs = versions(spark, root)
-    vs.nonEmpty && dvHeaders(spark, root, v.getOrElse(vs.last)).nonEmpty
+    (vs.nonEmpty || v.isDefined) &&
+      dvHeadersOf(snapshotIn(spark, root, vs, v).meta).nonEmpty
   }
 
   // durable TABLE PROPERTIES: `prop:<k>=<v>` headers describe the TABLE,
@@ -673,9 +787,6 @@ object VersionedTable {
   // itself, not in catalog-side configuration.
   private def propHeadersOf(meta: Map[String, String]): Map[String, String] =
     meta.filter { case (k, _) => k.startsWith("prop:") }
-
-  private def propHeaders(spark: SparkSession, root: String, v: Long): Map[String, String] =
-    propHeadersOf(manifestMeta(spark, root, v))
 
   // the user-facing table-properties view of one manifest's headers
   private def tablePropsOf(meta: Map[String, String]): Map[String, String] =
@@ -925,16 +1036,14 @@ object VersionedTable {
     } else (Map(s"dv:$gen" -> keyCol), Some(gen))
   }
 
-  // stats headers of version `v` that still apply because their
+  // stats headers of a manifest that still apply because their
   // generation survives into the next manifest — every commit kind that
   // RETAINS generations (append, merge, delete) must carry these, or one
   // maintenance commit silently turns data skipping off for the table
-  private def carriedStats(spark: SparkSession, root: String, v: Long,
+  private def carriedStats(meta: Map[String, String],
       keptDirs: Seq[String]): Map[String, String] = {
     val kept = keptDirs.toSet
-    manifestMeta(spark, root, v).filter { case (k, _) =>
-      entryHeaderDir(k).exists(kept.contains)
-    }
+    meta.filter { case (k, _) => entryHeaderDir(k).exists(kept.contains) }
   }
 
   // THE carry rule: the headers of a manifest that survive into any next
@@ -953,44 +1062,28 @@ object VersionedTable {
     }
 
   // THE append contract, shared by every append-shaped commit (batch and
-  // streaming): keep the previous snapshot's directories and its carried
-  // headers (idempotentCommit once silently dropped stats: by
+  // streaming): the tip's entries plus the new ones, under the tip's
+  // carried headers (idempotentCommit once silently dropped stats: by
   // re-implementing this inline).
-  private def appendCarry(spark: SparkSession, root: String,
-      lastV: Long): (Seq[String], Map[String, String]) = {
-    val (prev, meta) = manifestOf(spark, root, lastV)
-    (prev, carriedHeaders(meta))
-  }
+  private def appendOnto(tip: Snapshot,
+      entries: Seq[String]): (Seq[String], Map[String, String]) =
+    (tip.dirs ++ entries, carriedHeaders(tip.meta))
 
-  // the bounded optimistic retry of every commit that may land past a
-  // concurrent writer: `attempt(n)` returns Some(result) when its publish
-  // won, None when another writer took the version (re-read the log and
-  // try again). Commits that must not land past a writer abort instead.
-  @annotation.tailrec
-  private def retryPublish[A](root: String, n: Int = 1)(
-      attempt: Int => Option[A]): A =
-    if (n > 20)
-      throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-    else attempt(n) match {
-      case Some(a) => a
-      case None => retryPublish(root, n + 1)(attempt)
-    }
-
-  // THE metadata-only commit: each attempt resolves the tip, lets `edit`
-  // turn it and its carried headers into the new manifest's headers
-  // (validation inside `edit` re-runs whenever the tip moved), and
-  // publishes the tip's entries unchanged at tip+1. `raceHook` is the
-  // specs' seam between the first attempt's edit and its publish.
+  // THE metadata-only commit: resolves the tip, lets `edit` turn it and
+  // its carried headers into the new manifest's headers (validation
+  // inside `edit` re-runs whenever the tip moved), and publishes the
+  // tip's entries unchanged past any writer. `raceHook` is the specs'
+  // seam between the first attempt's edit and its publish.
   private def editTip(spark: SparkSession, root: String,
       raceHook: () => Unit = () => ())(
-      edit: (Snapshot, Map[String, String]) => Map[String, String]): Long =
-    retryPublish(root) { attempt =>
-      val tip = snapshot(spark, root, None)
+      edit: (Snapshot, Map[String, String]) => Map[String, String]): Long = {
+    val base = snapshot(spark, root, None)
+    publish(spark, root, base, Nil, PastAny) { tip =>
       val headers = edit(tip, carriedHeaders(tip.meta))
-      if (attempt == 1) raceHook()
-      if (tryPublish(spark, root, tip.v + 1, tip.dirs, headers)) Some(tip.v + 1)
-      else None
-    }
+      if (tip.v == base.v) raceHook()
+      Some((tip.dirs, headers))
+    }.get.v
+  }
 
   // [min,max,ndv,rows] headers for a freshly written generation, computed
   // from the written files — ONE narrow agg regardless of how many
@@ -1244,9 +1337,10 @@ object VersionedTable {
   }
 
   /** One commit: write `df` as a new immutable generation, then publish a
-    * manifest for version max+1 via atomic rename; on a concurrency loss
-    * the publish retries at the next version. `overwrite=false` keeps the
-    * prior snapshot's directories in the new manifest (append semantics).
+    * manifest for version max+1 via the atomic create-if-absent; on a
+    * concurrency loss the publish retries at the next version.
+    * `overwrite=false` keeps the prior snapshot's directories in the new
+    * manifest (append semantics).
     * Returns the committed version.
     *
     * `statsCol` opts into DATA SKIPPING: the new generation's [min,max]
@@ -1263,9 +1357,9 @@ object VersionedTable {
       statsCol: Option[String] = None,
       statsCols: Seq[String] = Nil,
       cdf: Option[DataFrame] = None): Long = {
-    val tipProps = versions(spark, root).lastOption
-      .map(v => tablePropsOf(manifestMeta(spark, root, v)))
-      .getOrElse(Map.empty[String, String])
+    val vs = versions(spark, root)
+    val base = if (vs.isEmpty) NoSnapshot else snapshotIn(spark, root, vs, None)
+    val tipProps = tablePropsOf(base.meta)
     requireNoDroppedNames(df, tipProps, "commit")
     val trackedCols = (statsCol.toSeq ++ statsCols).distinct
     val gen = writeGeneration(spark, root, df,
@@ -1281,34 +1375,25 @@ object VersionedTable {
     // it VERBATIM instead of shape-diffing, which is what makes even an
     // overwrite-shaped commit (an MV refresh) row-level expressible to
     // downstream incremental consumers. The headers are per-commit
-    // facts: neither [[appendCarry]] nor the overwrite prop-carry
+    // facts: neither [[appendOnto]] nor the overwrite prop-carry
     // forwards them, and [[vacuum]] retains the dirs like dv: lists.
-    val cdfHeaders: Map[String, String] = cdf match {
-      case None => Map.empty
-      case Some(cdfDf) =>
-        require(cdfDf.columns.contains("_change_type"),
-          "commit: a recorded CDF frame must carry _change_type")
-        val g = writeGeneration(spark, root, cdfDf, observeWrite = false)
-        genEntries(spark, root, g).map(e => s"cdf:$e" -> "true").toMap
+    val cdfGen = cdf.map { cdfDf =>
+      require(cdfDf.columns.contains("_change_type"),
+        "commit: a recorded CDF frame must carry _change_type")
+      writeGeneration(spark, root, cdfDf, observeWrite = false)
     }
+    val cdfHeaders = cdfGen.toSeq.flatMap(g => genEntries(spark, root, g))
+      .map(e => s"cdf:$e" -> "true").toMap
     val genStats = genStatsForEntries(spark, root, entries, trackedCols)
-    // a publish loss means another writer took this version — retry on a
-    // fresh read of the log (optimistic concurrency)
-    retryPublish(root) { _ =>
-      val vs = versions(spark, root)
-      val next = vs.lastOption.getOrElse(0L) + 1
+    // a publish loss means another writer took this version — rebuild on
+    // the new tip (optimistic concurrency)
+    publish(spark, root, base, gen +: cdfGen.toSeq, PastAny) { tip =>
       val (dirs, carried) =
-        if (vs.isEmpty) (entries, Map.empty[String, String])
-        else if (overwrite) // replaces the DATA; table properties survive
-          (entries, propHeaders(spark, root, vs.last))
-        else {
-          val (prev, prevCarry) = appendCarry(spark, root, vs.last)
-          (prev ++ entries, prevCarry)
-        }
-      if (tryPublish(spark, root, next, dirs,
-          carried ++ genStats ++ cdfHeaders ++ meta)) Some(next)
-      else None
-    }
+        if (overwrite) // replaces the DATA; table properties survive
+          (entries, propHeadersOf(tip.meta))
+        else appendOnto(tip, entries)
+      Some((dirs, carried ++ genStats ++ cdfHeaders ++ meta))
+    }.get.v
   }
 
   /** PRUNED snapshot read — the manifest-level half of data skipping
@@ -1535,10 +1620,7 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String,
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[Long] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to compact at $root")
-    val baseV = vs.last
-    val (baseDirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(_, baseDirs, baseMeta) = tipFor(spark, root, "compact")
     // one generation and no tombstones — already compact; with
     // outstanding deletion vectors, drop-column tombstones or widen
     // casts compaction is still meaningful even at one generation: it
@@ -1562,16 +1644,12 @@ object VersionedTable {
     // bulk generations may still hold the bytes). Widen casts clear the
     // same way: the rewrite read the widened view, so the new files are
     // physically wide and need no cast.
-    if (tryPublish(spark, root, baseV + 1, entries,
-        Map("rewrite" -> "true")
-          ++ propHeadersOf(baseMeta).filterNot(h =>
-            h._1.startsWith("prop:dropcol.") || h._1.startsWith("prop:widen."))
-          ++ genStatsForEntries(spark, root, entries, statsCol.toSeq)))
-      Some(baseV + 1)
-    else {
-      fs(spark, root).delete(new Path(root, gen), true)
-      None
-    }
+    val headers = Map("rewrite" -> "true") ++
+      propHeadersOf(baseMeta).filterNot(h =>
+        h._1.startsWith("prop:dropcol.") || h._1.startsWith("prop:widen.")) ++
+      genStatsForEntries(spark, root, entries, statsCol.toSeq)
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((entries, headers)))
+      .map(_.v)
   }
 
   /** INCREMENTAL small-file compaction — the everyday maintenance
@@ -1599,10 +1677,7 @@ object VersionedTable {
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
     require(smallBytes > 0, "compactSmall: smallBytes must be positive")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to compact at $root")
-    val baseV = vs.last
-    val (baseDirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(baseV, baseDirs, baseMeta) = tipFor(spark, root, "compact")
     val hfs = fs(spark, root)
     val small = baseDirs.filter(d =>
       hfs.getContentSummary(new Path(root, d)).getLength < smallBytes)
@@ -1616,16 +1691,11 @@ object VersionedTable {
       bloomCols = bloomColsOf(tablePropsOf(baseMeta)),
       obsCols = statsCol.toSeq)
     val entries = genEntries(spark, root, gen)
-    if (tryPublish(spark, root, baseV + 1, kept ++ entries,
-        Map("rewrite" -> "true")
-          ++ carriedStats(spark, root, baseV, kept)
-          ++ dvHeadersOf(baseMeta) ++ propHeadersOf(baseMeta)
-          ++ genStatsForEntries(spark, root, entries, statsCol.toSeq)))
-      Some((baseV + 1, small.size, kept.size))
-    else {
-      hfs.delete(new Path(root, gen), true)
-      None
-    }
+    val headers = Map("rewrite" -> "true") ++ carriedStats(baseMeta, kept) ++
+      dvHeadersOf(baseMeta) ++ propHeadersOf(baseMeta) ++
+      genStatsForEntries(spark, root, entries, statsCol.toSeq)
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((kept ++ entries, headers)))
+      .map(p => (p.v, small.size, kept.size))
   }
 
   /** Read a set of generation dirs as ONE frame, aligning columns BY NAME
@@ -1829,14 +1899,11 @@ object VersionedTable {
     require(clusterCols.nonEmpty && clusterCols.size <= 2,
       "optimize: 1 sort column or 2 z-order columns")
     require(targetBytes > 0, "optimize: targetBytes must be positive")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to optimize at $root")
-    val baseV = vs.last
+    val base @ Snapshot(_, baseDirs, baseMeta) = tipFor(spark, root, "optimize")
     val hfs = fs(spark, root)
     // size from the raw generations (DV key lists are negligible), but
     // cluster and publish the DV-APPLIED content — OPTIMIZE, like
     // compact, materializes outstanding tombstones into the rewrite
-    val (baseDirs, baseMeta) = manifestOf(spark, root, baseV)
     val raw = readDirs(spark, root, baseDirs, baseMeta)
     val df = applyDvs(spark, root, baseMeta, raw)
     val files = raw.inputFiles
@@ -1852,22 +1919,22 @@ object VersionedTable {
       bloomCols = bloomColsOf(tablePropsOf(baseMeta)),
       obsCols = statsCol.toSeq)
     val entries = genEntries(spark, root, gen)
-    if (tryPublish(spark, root, baseV + 1, entries,
-        Map("rewrite" -> "true")
-          // full rewrite: dropped columns' bytes are purged and widened
-          // columns are physically wide — clear both (the compact() rule)
-          ++ propHeadersOf(baseMeta).filterNot(h =>
-            h._1.startsWith("prop:dropcol.") || h._1.startsWith("prop:widen."))
-          ++ genStatsForEntries(spark, root, entries, statsCol.toSeq))) {
-      val filesAfter = entries.map(e =>
-        hfs.listStatus(new Path(root, e))
-          .count(st => st.isFile && st.getPath.getName.startsWith("part-"))).sum
-      Some((baseV + 1, Compaction.Stats(files.length, filesAfter, rows)))
-    } else {
-      hfs.delete(new Path(root, gen), true)
-      None
-    }
+    val headers = Map("rewrite" -> "true") ++
+      // full rewrite: dropped columns' bytes are purged and widened
+      // columns are physically wide — clear both (the compact() rule)
+      propHeadersOf(baseMeta).filterNot(h =>
+        h._1.startsWith("prop:dropcol.") || h._1.startsWith("prop:widen.")) ++
+      genStatsForEntries(spark, root, entries, statsCol.toSeq)
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((entries, headers)))
+      .map(p => (p.v,
+        Compaction.Stats(files.length, partFileCount(spark, root, entries), rows)))
   }
+
+  // the data files a rewrite's fresh entries hold
+  private def partFileCount(spark: SparkSession, root: String,
+      entries: Seq[String]): Int =
+    entries.map(e => fs(spark, root).listStatus(new Path(root, e))
+      .count(st => st.isFile && st.getPath.getName.startsWith("part-"))).sum
 
   /** PARTITION-SCOPED OPTIMIZE — the production maintenance cadence at
     * scale: a 100 TB table never runs a whole-table rewrite; it
@@ -1902,10 +1969,7 @@ object VersionedTable {
     require(clusterCols.nonEmpty && clusterCols.size <= 2,
       "optimizePartition: 1 sort column or 2 z-order columns")
     require(targetBytes > 0, "optimizePartition: targetBytes must be positive")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to optimize at $root")
-    val baseV = vs.last
-    val (baseDirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(baseV, baseDirs, baseMeta) = tipFor(spark, root, "optimize")
     val (field, token) = boundPartSpec(baseMeta, partSpec)
     val hit = baseDirs.filter(d =>
       partValueOf(d, field.name).contains(Some(token)))
@@ -1930,20 +1994,12 @@ object VersionedTable {
       bloomCols = bloomColsOf(tablePropsOf(baseMeta)),
       obsCols = statsCol.toSeq)
     val entries = genEntries(spark, root, gen)
-    if (tryPublish(spark, root, baseV + 1, kept ++ entries,
-        Map("rewrite" -> "true")
-          ++ carriedStats(spark, root, baseV, kept)
-          ++ dvHeadersOf(baseMeta) ++ propHeadersOf(baseMeta)
-          ++ genStatsForEntries(spark, root, entries, statsCol.toSeq))) {
-      val filesAfter = entries.map(e =>
-        hfs.listStatus(new Path(root, e))
-          .count(st => st.isFile && st.getPath.getName.startsWith("part-"))).sum
-      Some((baseV + 1, hit.size, kept.size,
-        Compaction.Stats(sliceFiles.length, filesAfter, rows)))
-    } else {
-      hfs.delete(new Path(root, gen), true)
-      None
-    }
+    val headers = Map("rewrite" -> "true") ++ carriedStats(baseMeta, kept) ++
+      dvHeadersOf(baseMeta) ++ propHeadersOf(baseMeta) ++
+      genStatsForEntries(spark, root, entries, statsCol.toSeq)
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((kept ++ entries, headers)))
+      .map(p => (p.v, hit.size, kept.size,
+        Compaction.Stats(sliceFiles.length, partFileCount(spark, root, entries), rows)))
   }
 
   /** MERGE / UPSERT as COPY-ON-WRITE at generation granularity: rows of
@@ -1980,10 +2036,7 @@ object VersionedTable {
       keyCol: String, statsCol: Option[String] = None,
       schemaEvolution: Boolean = false,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to merge into at $root")
-    val baseV = vs.last
-    val (dirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "merge into")
     requireFoldableDvs(baseMeta, keyCol) // refuse mixed-key DVs up front
     // MERGE SCHEMA EVOLUTION (Delta's autoMerge, behind an explicit
     // flag): source columns the table lacks fold the widen INTO the
@@ -2024,7 +2077,6 @@ object VersionedTable {
       .select(col("_file")).distinct().collect()
       .map(r => genOfFile(r.getString(0))).toSet
     val touched = dirs.filter(d => touchedGens.contains(genPrefixOf(d)))
-    val untouched = dirs.filterNot(touched.contains)
     // survivors of the touched generations — read THROUGH the
     // outstanding DVs, so their tombstoned rows die physically in the
     // rewrite — plus the full source (updates land with their new
@@ -2051,20 +2103,14 @@ object VersionedTable {
     // rows), every other key stays deleted. The mixed-key precondition
     // was checked before anything was written.
     val (dvNew, dvGen) = foldDvs(spark, root, baseMeta, keyCol, srcKeys)
-    publishRowLevel(spark, root, baseV, baseMeta, touched,
-      untouched, entries, Map("merge" -> "true"), dvNew,
+    publishRowLevel(spark, root, base, touched, gen +: dvGen.toSeq, entries,
+      Map("merge" -> "true"), dvNew,
       genStatsForEntries(spark, root, entries, statsCol.toSeq),
-      keyCol, srcKeys) match {
-      case Some((v, carried)) => Some((v, touched.size, carried))
-      case None =>
-        fs(spark, root).delete(new Path(root, gen), true)
-        dvGen.foreach(g => fs(spark, root).delete(new Path(root, g), true))
-        None
-    }
+      keyCol, srcKeys).map { case (v, carried) => (v, touched.size, carried) }
   }
 
-  /** Publish a copy-on-write row-level commit — first at base+1, and on
-    * a concurrency loss attempt a KEY-DISJOINT REBASE (r18, the
+  /** Publish a copy-on-write row-level commit at base+1, or — when
+    * commits landed past the base — by a KEY-DISJOINT REBASE (r18, the
     * Delta/Iceberg logical-conflict resolution): the commit may land at
     * tip+1 instead of aborting when EVERY intervening commit is itself
     * a row-level copy-on-write commit (merge/update/delete) that is
@@ -2086,54 +2132,27 @@ object VersionedTable {
     * Returns Some((version, carried count)) or None.
     */
   private def publishRowLevel(spark: SparkSession, root: String,
-      baseV: Long, baseMeta: Map[String, String], touched: Seq[String],
-      untouched: Seq[String], entries: Seq[String],
-      kindHeaders: Map[String, String], dvNew: Map[String, String],
-      genStats: Map[String, String], keyCol: String,
-      ourKeys: DataFrame): Option[(Long, Int)] = {
-    if (tryPublish(spark, root, baseV + 1, untouched ++ entries,
-        kindHeaders ++ carriedStats(spark, root, baseV, untouched)
-          ++ propHeaders(spark, root, baseV) ++ dvNew ++ genStats))
-      return Some((baseV + 1, untouched.size))
-    if (dvHeadersOf(baseMeta).nonEmpty) return None
+      base: Snapshot, touched: Seq[String], wrote: Seq[String],
+      entries: Seq[String], kindHeaders: Map[String, String],
+      dvNew: Map[String, String], genStats: Map[String, String],
+      keyCol: String, ourKeys: DataFrame): Option[(Long, Int)] = {
     val ourTouched = touched.toSet
     val keys = ourKeys.select(col(keyCol))
-    def interventionOk(vs: Seq[Long], v: Long): Boolean = {
-      val kind = commitKind(spark, root, v).stripSuffix("+txn")
-      Set("merge", "update", "delete").contains(kind) && {
-        val prev = vs.filter(_ < v).last
-        val (prevDirs, prevMeta) = manifestOf(spark, root, prev)
-        val (curDirs, curMeta) = manifestOf(spark, root, v)
-        dvHeadersOf(prevMeta).isEmpty && dvHeadersOf(curMeta).isEmpty && {
-          val removed = prevDirs.filterNot(curDirs.contains)
-          val added = curDirs.filterNot(prevDirs.contains)
-          removed.forall(d => !ourTouched.contains(d)) && {
-            val delta = (removed ++ added).distinct
-            delta.isEmpty || readDirs(spark, root, delta, curMeta)
-              .select(col(keyCol))
-              .join(broadcast(keys), Seq(keyCol), "left_semi")
-              .isEmpty
-          }
-        }
-      }
-    }
-    var checkedTo = baseV
-    var attempt = 0
-    while (attempt < 10) {
-      attempt += 1
-      val vs = versions(spark, root)
-      val tip = vs.last
-      if (!vs.filter(v => v > checkedTo && v <= tip)
-          .forall(v => interventionOk(vs, v))) return None
-      checkedTo = tip
-      val tipDirs = manifestDirs(spark, root, tip)
-      val carried = tipDirs.filterNot(ourTouched.contains)
-      if (tryPublish(spark, root, tip + 1, carried ++ entries,
-          kindHeaders ++ carriedStats(spark, root, tip, carried)
-            ++ propHeaders(spark, root, tip) ++ dvNew ++ genStats))
-        return Some((tip + 1, carried.size))
-    }
-    None
+    val disjoint = PastIf(i =>
+      dvHeadersOf(base.meta).isEmpty && dvHeadersOf(i.snap.meta).isEmpty &&
+        Set("merge", "update", "delete").contains(i.kind) &&
+        i.removed.forall(d => !ourTouched.contains(d)) && {
+          val delta = (i.removed ++ i.added).distinct
+          delta.isEmpty || readDirs(spark, root, delta, i.snap.meta)
+            .select(col(keyCol))
+            .join(broadcast(keys), Seq(keyCol), "left_semi")
+            .isEmpty
+        })
+    publish(spark, root, base, wrote, disjoint) { tip =>
+      val carried = tip.dirs.filterNot(ourTouched.contains)
+      Some((carried ++ entries, kindHeaders ++ carriedStats(tip.meta, carried) ++
+        propHeadersOf(tip.meta) ++ dvNew ++ genStats))
+    }.map(p => (p.v, p.dirs.size - entries.size))
   }
 
   /** Apply an explicit ROW-LEVEL DELTA — row-id keys to delete plus rows
@@ -2172,16 +2191,13 @@ object VersionedTable {
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
     require(Set("merge", "update", "delete").contains(kindHeader),
       s"applyRowDelta: unknown kind '$kindHeader'")
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to modify at $root")
-    val baseV = vs.last
+    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "modify")
     val delStats = deleteKeys.agg(
       count(lit(1)), count(when(col(keyCol).isNull, 1))).head()
     val (nOps, nNullKeys) = (delStats.getLong(0), delStats.getLong(1))
     require(nNullKeys == 0,
       s"applyRowDelta: delete operations carry NULL $keyCol — an equality " +
         "anti-join cannot remove them; use deleteWhere (copy-on-write)")
-    val (dirs, baseMeta) = manifestOf(spark, root, baseV)
     val keys = deleteKeys.select(col(keyCol)).distinct()
     // a pure DELETE stages no insert rows — its frame has no columns at
     // all (the statement's write schema is just the row ids)
@@ -2230,7 +2246,6 @@ object VersionedTable {
         "identify the targeted rows; deleting by key would remove " +
         "same-key neighbors the statement never touched")
     val touched = dirs.filter(d => touchedGens.contains(genPrefixOf(d)))
-    val untouched = dirs.filterNot(touched.contains)
     // touched generations rewrite THROUGH the DVs (their tombstoned rows
     // die physically in the rewrite)
     val survivors =
@@ -2268,17 +2283,11 @@ object VersionedTable {
     val footprint =
       if (!hasInserts) keys
       else keys.unionByName(inserts.select(col(keyCol))).distinct()
-    publishRowLevel(spark, root, baseV, baseMeta, touched,
-      untouched, entries, Map(kindHeader -> "true"), dvNew,
+    publishRowLevel(spark, root, base, touched, gen +: dvGen.toSeq, entries,
+      Map(kindHeader -> "true"), dvNew,
       genStatsForEntries(spark, root, entries,
         (statsCol.toSeq ++ statsCols).distinct),
-      keyCol, footprint) match {
-      case Some((v, carried)) => Some((v, touched.size, carried))
-      case None =>
-        fs(spark, root).delete(new Path(root, gen), true)
-        dvGen.foreach(g => fs(spark, root).delete(new Path(root, g), true))
-        None
-    }
+      keyCol, footprint).map { case (v, carried) => (v, touched.size, carried) }
   }
 
   /** DELETE WHERE as COPY-ON-WRITE at generation granularity — the
@@ -2305,10 +2314,7 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, root: String, pred: Column,
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[(Long, Long, Int, Int)] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to delete from at $root")
-    val baseV = vs.last
-    val (dirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "delete from")
     // a delete composes with outstanding tombstones directly: detection
     // and the rewrite both run over the DV-APPLIED view (already-hidden
     // rows need no deleting and must not resurrect in the rewrite), and
@@ -2339,15 +2345,11 @@ object VersionedTable {
       partitionFieldsAt(spark, root), bloomCols = bloomColsAt(spark, root),
       obsCols = statsCol.toSeq)
     val entries = genEntries(spark, root, gen)
-    if (tryPublish(spark, root, baseV + 1, untouched ++ entries,
-        Map("delete" -> "true") ++ carriedStats(spark, root, baseV, untouched)
-          ++ propHeaders(spark, root, baseV) ++ dvHeadersOf(baseMeta)
-          ++ genStatsForEntries(spark, root, entries, statsCol.toSeq)))
-      Some((baseV + 1, deleted, touched.size, untouched.size))
-    else {
-      fs(spark, root).delete(new Path(root, gen), true)
-      None
-    }
+    val headers = Map("delete" -> "true") ++ carriedStats(baseMeta, untouched) ++
+      propHeadersOf(baseMeta) ++ dvHeadersOf(baseMeta) ++
+      genStatsForEntries(spark, root, entries, statsCol.toSeq)
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((untouched ++ entries, headers)))
+      .map(p => (p.v, deleted, touched.size, untouched.size))
   }
 
   /** Commit kind of version `v`, derived from its manifest headers and —
@@ -2360,47 +2362,47 @@ object VersionedTable {
     */
   def commitKind(spark: SparkSession, root: String, v: Long): String = {
     val vs = versions(spark, root)
-    val meta = manifestMeta(spark, root, v)
-    val base =
-      if (meta.get("rewrite").contains("true")) "rewrite"
-      else if (meta.get("merge").contains("true")) "merge"
-      else if (meta.get("update").contains("true")) "update"
-      else if (meta.get("delete").contains("true")) "delete"
-      else if (meta.get("mor_delete").contains("true")) "mor_delete"
-      else if (meta.get("replace_partitions").contains("true")) "replace_partitions"
-      else if (meta.get("properties").contains("true")) "set_properties"
-      else if (meta.get("alter").contains("add_columns")) "add_columns"
-      else if (meta.get("alter").contains("rename_column")) "rename_column"
-      else if (meta.get("alter").contains("widen_column")) "widen_column"
-      else if (meta.get("alter").contains("set_partition_spec")) "set_partition_spec"
-      else if (meta.get("alter").contains("drop_column")) "drop_column"
-      else if (meta.contains("tag")) "tag"
-      else if (meta.contains("wap_publish")) "wap_publish"
-      else if (meta.contains("restore")) "restore"
-      else vs.filter(_ < v).lastOption match {
-        case None => "create"
-        case Some(prev) =>
-          val before = manifestDirs(spark, root, prev)
-          val after = manifestDirs(spark, root, v)
-          if (before.forall(after.contains)) "append" else "overwrite"
-      }
+    val snap = snapshotIn(spark, root, vs, Some(v))
+    kindOf(vs.filter(_ < v).lastOption.map(manifestDirs(spark, root, _)),
+      snap.dirs, snap.meta)
+  }
+
+  // THE commit-kind rule, a pure function of one manifest's headers and —
+  // for the header-less kinds only — its predecessor's entries (None =
+  // no earlier manifest in the log)
+  private def kindOf(prevDirs: => Option[Seq[String]], dirs: Seq[String],
+      meta: Map[String, String]): String = {
+    val stamped = Seq("rewrite", "merge", "update", "delete", "mor_delete",
+      "replace_partitions", "properties").find(k => meta.get(k).contains("true"))
+      .map(k => if (k == "properties") "set_properties" else k)
+      .orElse(meta.get("alter").filter(Set("add_columns", "rename_column",
+        "widen_column", "set_partition_spec", "drop_column")))
+      .orElse(Seq("tag", "wap_publish", "restore").find(meta.contains))
+    val base = stamped.getOrElse(prevDirs match {
+      case None => "create"
+      case Some(before) => if (before.forall(dirs.contains)) "append" else "overwrite"
+    })
     if (meta.contains("txnApp")) s"$base+txn" else base
   }
 
   /** DESCRIBE HISTORY: one row per commit — version, kind, generation
     * and outstanding-DV counts, txn stamp, commit timestamp — computed
-    * from the manifests alone (bytes-sized reads; no data touched). The
-    * operational first question on any lakehouse table — "what happened
-    * to this table?" — answered from the log that already records it.
+    * from the manifests alone (one `_log` listing, one open per manifest;
+    * no data touched). The operational first question on any lakehouse
+    * table — "what happened to this table?" — answered from the log that
+    * already records it.
     */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val vs = versions(spark, root)
-    val rows = vs.map { v =>
+    val snaps = versions(spark, root).map { v =>
       val (dirs, meta) = manifestOf(spark, root, v)
-      (v, commitKind(spark, root, v), dirs.size, dvHeadersOf(meta).size,
-        meta.get("txnApp").orNull,
-        meta.get("txnBatch").map(_.toLong),
-        new java.sql.Timestamp(commitTimestamp(spark, root, v) / 1000L))
+      Snapshot(v, dirs, meta)
+    }
+    val rows = (None +: snaps.map(s => Some(s.dirs))).zip(snaps).map {
+      case (prevDirs, Snapshot(v, dirs, meta)) =>
+        (v, kindOf(prevDirs, dirs, meta), dirs.size, dvHeadersOf(meta).size,
+          meta.get("txnApp").orNull,
+          meta.get("txnBatch").map(_.toLong),
+          new java.sql.Timestamp(tsOf(spark, root, v, meta) / 1000L))
     }
     import spark.implicits._
     rows.toDF("version", "kind", "n_generations", "n_dvs",
@@ -2496,12 +2498,9 @@ object VersionedTable {
       bloomCols = bloomColsOf(normProps))
     val entries = genEntries(spark, root, gen)
     validateGeneration(spark, root, gen, entries, extraProps = normProps)
-    if (tryPublish(spark, root, 1L, entries,
-        normProps.map { case (k, v) => s"prop:$k" -> v })) true
-    else {
-      fs(spark, root).delete(new Path(root, gen), true)
-      false
-    }
+    val headers = normProps.map { case (k, v) => s"prop:$k" -> v }
+    publish(spark, root, NoSnapshot, Seq(gen), AtBase)(_ => Some((entries, headers)))
+      .isDefined
   }
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES as a METADATA-ONLY commit: the
@@ -3033,9 +3032,9 @@ object VersionedTable {
       raceHook: () => Unit = () => ()): Option[Long] = {
     val vs = versions(spark, root)
     require(vs.contains(toV), s"VersionedTable: version $toV not in $vs")
-    val baseV = vs.last
-    if (toV == baseV) return Some(baseV) // restoring to the tip: no-op
+    if (toV == vs.last) return Some(toV) // restoring to the tip: no-op
     val (dirs, meta) = manifestOf(spark, root, toV)
+    val base = snapshotIn(spark, root, vs, None)
     val keepHeaders = carriedHeaders(meta).filterNot(_._1.startsWith("prop:"))
     // stats/dv headers describe toV's generations (restored verbatim);
     // properties describe the TABLE, so the restore keeps the CURRENT
@@ -3047,18 +3046,16 @@ object VersionedTable {
     // unconditionally" invariant — so validate the restored snapshot
     // against the carried constraints first and refuse on violation
     // (UNSET the constraint to force the restore through).
-    val carriedProps = propHeaders(spark, root, baseV)
+    val carriedProps = propHeadersOf(base.meta)
     val carriedConstraints = constraintsOf(
       carriedProps.map { case (k, v) => k.stripPrefix("prop:") -> v })
     if (carriedConstraints.nonEmpty)
       enforceConstraints(spark, root, carriedConstraints,
         readAt(spark, root, Some(toV)), gen = None)
     raceHook()
-    if (tryPublish(spark, root, baseV + 1, dirs,
-        keepHeaders ++ carriedProps
-          + ("restore" -> toV.toString)))
-      Some(baseV + 1)
-    else None // no orphan to reclaim — restore writes no generation
+    publish(spark, root, base, Nil, AtBase)(_ =>
+      Some((dirs, keepHeaders ++ carriedProps + ("restore" -> toV.toString))))
+      .map(_.v)
   }
 
   // ---- NAMED REFS: tags + branches (write-audit-publish) ------------
@@ -3073,8 +3070,8 @@ object VersionedTable {
   // to production readers until FAST-FORWARD atomically publishes the
   // branch tip's manifest as main's next version: the write-audit-
   // publish pattern (write to the branch, validate by reading the
-  // branch, publish with one rename). The branch's view of the data is
-  // the same readDirs/applyDvs machinery as main's.
+  // branch, publish with one manifest create). The branch's view of the
+  // data is the same readDirs/applyDvs machinery as main's.
 
   private val BranchRe = """b\.([A-Za-z0-9_\-]+)\.(\d+)\.commit""".r
 
@@ -3169,16 +3166,16 @@ object VersionedTable {
   def createBranch(spark: SparkSession, root: String, name: String,
       fromV: Option[Long] = None): Long = {
     refName(name)
-    val Snapshot(base, dirs, meta) = snapshot(spark, root, fromV)
+    val fork @ Snapshot(base, dirs, meta) = snapshot(spark, root, fromV)
     require(branchVersions(spark, root, name).isEmpty,
       s"createBranch: branch '$name' already exists")
     // main-tip txn stamps seed the fork, so a staged stream's replay
     // dedup survives a publish → drop → re-branch cadence
     val kept = carriedHeaders(meta) ++
       meta.filter { case (k, _) => k == "txnApp" || k == "txnBatch" }
-    require(tryPublishAt(spark, root, s"b.$name.$base.commit",
-        commitTsOpt(spark, root, base),
-        dirs, kept + ("branch_base" -> base.toString)),
+    // the branch's first manifest is numbered by its fork point
+    require(publish(spark, root, fork, Nil, AtBase, _ => s"b.$name.$base.commit")(
+        _ => Some((dirs, kept + ("branch_base" -> base.toString)))).isDefined,
       s"createBranch: branch '$name' lost a creation race")
     base
   }
@@ -3195,8 +3192,8 @@ object VersionedTable {
       meta: Map[String, String] = Map.empty): Long = {
     val bvs = branchVersions(spark, root, name)
     require(bvs.nonEmpty, s"commitToBranch: no branch '$name'")
-    val tipB = bvs.last
-    val (dirs, bMeta) = branchManifestOf(spark, root, name, tipB)
+    val tip @ Snapshot(tipB, dirs, bMeta) =
+      snapshotIn(spark, root, bvs, None, branch = Some(name))
     val props = tablePropsOf(bMeta)
     requireNoDroppedNames(df, props, s"branch '$name' commit")
     val gen = writeGeneration(spark, root, df, partitionFieldsOf(props),
@@ -3209,9 +3206,9 @@ object VersionedTable {
     val carried = carriedHeaders(bMeta) ++
       bMeta.filter { case (k, _) => k == "branch_base" }
     val genStats = genStatsForEntries(spark, root, entries, statsCols)
-    require(tryPublishAt(spark, root, s"b.$name.${tipB + 1}.commit",
-        bMeta.get("ts").map(_.toLong), dirs ++ entries,
-        carried ++ genStats ++ meta),
+    // a lost publish reclaims the generation before the refusal
+    require(publish(spark, root, tip, Seq(gen), AtBase, v => s"b.$name.$v.commit")(
+        _ => Some((dirs ++ entries, carried ++ genStats ++ meta))).isDefined,
       s"commitToBranch: branch '$name' version ${tipB + 1} already " +
         "exists — branches are single-writer per commit")
     tipB + 1
@@ -3255,7 +3252,7 @@ object VersionedTable {
     readSnapshot(spark, root, snapshot(spark, root, v, branch = Some(name)))
 
   /** PUBLISH: fast-forward main to the branch tip — ONE atomic manifest
-    * rename makes every staged commit visible to production readers at
+    * create makes every staged commit visible to production readers at
     * once (kind `wap_publish`, the branch name in the header). When main
     * hasn't moved past the fork point, the branch manifest publishes
     * verbatim. When it HAS, the Delta/Iceberg-style logical conflict
@@ -3276,10 +3273,12 @@ object VersionedTable {
     val base = bMeta.getOrElse("branch_base",
       sys.error(s"fastForward: branch '$name' has no base marker")).toLong
     // the fork point's dirs come from the BRANCH'S OWN first manifest
-    // (identical to main's by construction) — main's copy may have been
-    // legally vacuumed while the branch stayed alive
-    val baseDirs = branchManifestOf(spark, root, name, bvs.head)._1.toSet
-    val added = bDirs.filterNot(baseDirs.contains)
+    // (identical to main's by construction, dv: headers included) —
+    // main's copy may have been legally vacuumed while the branch stayed
+    // alive
+    val (forkDirs, forkMeta) = branchManifestOf(spark, root, name, bvs.head)
+    val fork = Snapshot(base, forkDirs, forkMeta)
+    val added = bDirs.filterNot(forkDirs.toSet)
     // the branch TIP's txn stamp rides into the published manifest (and
     // createBranch copies main-tip stamps back into a fresh branch), so
     // an exactly-once staged STREAM survives the publish → drop →
@@ -3289,51 +3288,31 @@ object VersionedTable {
     val bTxn = bMeta.filter { case (k, _) => k == "txnApp" || k == "txnBatch" }
     val bHeaders = carriedHeaders(bMeta) ++ bTxn
     raceHook()
-    var attempt = 0
-    while (attempt < 10) {
-      attempt += 1
-      val vs = versions(spark, root)
-      val tip = vs.last
-      if (tip == base) {
-        if (tryPublish(spark, root, tip + 1, bDirs,
-            bHeaders + ("wap_publish" -> name)))
-          return Some(tip + 1)
-      } else {
-        // the logical conflict check needs EVERY intervening commit:
-        // vacuumed gaps in (base, tip] mean unverifiable history (a
-        // reclaimed conflict would pass silently) — abort loudly
-        val contiguous = (base to tip).forall(vs.contains)
-        val clean = contiguous &&
-          vs.filter(v => v > base && v <= tip).forall { v =>
-            val kind = commitKind(spark, root, v).stripSuffix("+txn")
-            (kind == "append" || kind == "tag" || kind == "set_properties" ||
-              kind == "add_columns") &&
-              dvHeaders(spark, root, v) == dvHeaders(spark, root, base)
-          }
-        if (!clean) return None
-        val (tipDirs, tipMeta) = manifestOf(spark, root, tip)
-        val tipHeaders = carriedHeaders(tipMeta)
+    val appendShaped = PastIf(i =>
+      Set("append", "tag", "set_properties", "add_columns").contains(i.kind) &&
+        dvHeadersOf(i.snap.meta) == dvHeadersOf(forkMeta))
+    publish(spark, root, fork, Nil, appendShaped) { tip =>
+      if (tip.v == base) Some((bDirs, bHeaders + ("wap_publish" -> name)))
+      else {
         // constraints ADDED on main since the fork were never enforced
         // on the staged generations (commitToBranch gates against the
         // fork-time set): validate the staged rows against the tip's
         // new/changed constraints before they become visible — a
         // declared CHECK must stay trustworthy unconditionally
         val branchCs = constraintsOf(tablePropsOf(bMeta))
-        val newCs = constraintsOf(tablePropsOf(tipMeta)).filter {
+        val newCs = constraintsOf(tablePropsOf(tip.meta)).filter {
           case (n, e) => !branchCs.get(n).contains(e)
         }
         if (newCs.nonEmpty && added.nonEmpty)
           enforceConstraints(spark, root, newCs,
-            readDirs(spark, root, added, tipMeta), gen = None)
+            readDirs(spark, root, added, tip.meta), gen = None)
         val addedStats = bMeta.filter { case (k, _) =>
           entryHeaderDir(k).exists(added.contains)
         }
-        if (tryPublish(spark, root, tip + 1, tipDirs ++ added,
-            tipHeaders ++ addedStats ++ bTxn + ("wap_publish" -> name)))
-          return Some(tip + 1)
+        Some((tip.dirs ++ added,
+          carriedHeaders(tip.meta) ++ addedStats ++ bTxn + ("wap_publish" -> name)))
       }
-    }
-    None
+    }.map(_.v)
   }
 
   /** Retire branch `name`: its manifests are removed; its generations
@@ -3402,10 +3381,7 @@ object VersionedTable {
   def overwritePartitions(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to overwrite at $root")
-    val baseV = vs.last
-    val (dirs, baseMeta) = manifestOf(spark, root, baseV)
+    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "overwrite")
     val partFields = partitionFieldsOf(tablePropsOf(baseMeta))
     require(partFields.nonEmpty,
       "overwritePartitions: the table declares no partition columns — " +
@@ -3516,51 +3492,30 @@ object VersionedTable {
       genEntries(spark, root, g))
     val newEntries = entries ++ plainEntries
     val genStats = genStatsForEntries(spark, root, newEntries, statsCols)
-    def reclaim(): Unit = {
-      fs(spark, root).delete(new Path(root, gen), true)
-      plainGen.foreach(g => fs(spark, root).delete(new Path(root, g), true))
-    }
-    // PUBLISH WITH PARTITION-DISJOINT REBASE: each attempt re-reads the
-    // tip; commits that landed since the last look must be append- or
-    // replace-partitions-shaped, tombstone-free, and touch only leaves
-    // whose tuples avoid this batch's — then the write rebases (carried
-    // set recomputed from the tip, which includes the interveners' new
-    // disjoint leaves). The conflict check itself is manifest-sized.
-    var checkedTo = baseV
-    var attempt = 0
-    while (attempt < 10) {
-      attempt += 1
-      val cur = versions(spark, root)
-      val tip = cur.last
-      val disjoint = cur.filter(v => v > checkedTo && v <= tip).forall { v =>
-        val kind = commitKind(spark, root, v).stripSuffix("+txn")
-        val prevV = cur.filter(_ < v).last
-        val before = manifestDirs(spark, root, prevV)
-        val after = manifestDirs(spark, root, v)
-        val delta = after.filterNot(before.contains) ++
-          before.filterNot(after.contains)
-        (kind == "append" || kind == "replace_partitions") &&
-          dvHeaders(spark, root, v).isEmpty &&
-          delta.forall(e => entryTuple(e).exists(t => !tupleSet.contains(t)))
-      }
-      if (!disjoint) { reclaim(); return None }
-      val (tipDirs, tipMeta) = manifestOf(spark, root, tip)
-      val (replacedNow, plainNow, leavesNow) = splitDirs(tipDirs)
+    // PUBLISH WITH PARTITION-DISJOINT REBASE: commits that landed since
+    // the base must be append- or replace-partitions-shaped,
+    // tombstone-free, and touch only leaves whose tuples avoid this
+    // batch's — then the write rebases (carried set recomputed from the
+    // tip, which includes the interveners' new disjoint leaves). The
+    // conflict check itself is manifest-sized.
+    val disjoint = PastIf(i =>
+      Set("append", "replace_partitions").contains(i.kind) &&
+        dvHeadersOf(i.snap.meta).isEmpty &&
+        (i.added ++ i.removed).forall(e =>
+          entryTuple(e).exists(t => !tupleSet.contains(t))))
+    var replaced = 0
+    publish(spark, root, base, gen +: plainGen.toSeq, disjoint) { tip =>
+      val (replacedNow, plainNow, leavesNow) = splitDirs(tip.dirs)
       // the plain set the anti-join was computed against must be intact
       // (an intervening append of a tuple-less generation was already a
       // conflict above; this guards the base-era plain carriers too)
-      if (plainNow.toSet != plain.toSet) { reclaim(); return None }
-      val carriedNow = leavesNow ++ (if (plainRows.isEmpty) plainNow else Nil)
-      checkedTo = tip
-      if (tryPublish(spark, root, tip + 1, carriedNow ++ newEntries,
-          Map("replace_partitions" -> "true")
-            ++ carriedStats(spark, root, tip, carriedNow)
-            ++ propHeadersOf(tipMeta)
-            ++ genStats))
-        return Some((tip + 1, replacedNow.size, carriedNow.size))
-    }
-    reclaim()
-    None
+      Option.when(plainNow.toSet == plain.toSet) {
+        replaced = replacedNow.size
+        val carriedNow = leavesNow ++ (if (plainRows.isEmpty) plainNow else Nil)
+        (carriedNow ++ newEntries, Map("replace_partitions" -> "true") ++
+          carriedStats(tip.meta, carriedNow) ++ propHeadersOf(tip.meta) ++ genStats)
+      }
+    }.map(p => (p.v, replaced, p.dirs.size - newEntries.size))
   }
 
   /** DELETE WHERE as MERGE-ON-READ (deletion vectors): instead of
@@ -3596,10 +3551,8 @@ object VersionedTable {
     */
   def deleteWhereMor(spark: SparkSession, root: String, pred: Column,
       keyCol: String, raceHook: () => Unit = () => ()): Option[(Long, Long)] = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to delete from at $root")
-    val baseV = vs.last
-    val keys = readAt(spark, root, Some(baseV))
+    val base = tipFor(spark, root, "delete from")
+    val keys = readSnapshot(spark, root, base)
       .filter(pred).select(col(keyCol)).distinct()
       // key lists are tombstones EVERY read anti-joins against: land
       // them advisory-sized, not one near-empty file per shuffle task
@@ -3631,17 +3584,12 @@ object VersionedTable {
     }
     if (nKeys == 0) { // no-op: nothing matches, reclaim the empty gen
       hfs.delete(genPath, true)
-      return Some((baseV, 0L))
+      return Some((base.v, 0L))
     }
-    val (dirs, carried) = appendCarry(spark, root, baseV)
     raceHook()
-    if (tryPublish(spark, root, baseV + 1, dirs,
-        carried + (s"dv:$gen" -> keyCol) + ("mor_delete" -> "true")))
-      Some((baseV + 1, nKeys))
-    else {
-      fs(spark, root).delete(new Path(root, gen), true)
-      None
-    }
+    publish(spark, root, base, Seq(gen), AtBase)(_ => Some((base.dirs,
+      carriedHeaders(base.meta) + (s"dv:$gen" -> keyCol) + ("mor_delete" -> "true"))))
+      .map(p => (p.v, nKeys))
   }
 
   /** EXACTLY-ONCE streaming commit: `foreachBatch` is at-least-once after
@@ -3679,32 +3627,21 @@ object VersionedTable {
     val vs0 = versions(spark, root)
     if (absorbed(vs0)) return (vs0.last, false)
     raceHook()
-    vs0.lastOption.foreach(v => requireNoDroppedNames(df,
-      tablePropsOf(manifestMeta(spark, root, v)), "idempotentCommit"))
+    val base = if (vs0.isEmpty) NoSnapshot else snapshotIn(spark, root, vs0, None)
+    requireNoDroppedNames(df, tablePropsOf(base.meta), "idempotentCommit")
     val gen = writeGeneration(spark, root, df,
       partitionFieldsAt(spark, root), bloomCols = bloomColsAt(spark, root))
     val entries = genEntries(spark, root, gen)
     validateGeneration(spark, root, gen, entries)
     val meta = Map("txnApp" -> appId, "txnBatch" -> batchId.toString)
-    retryPublish(root) { _ =>
-      val vs = versions(spark, root)
-      if (absorbed(vs)) { // a racing replay won — this copy must not land
-        fs(spark, root).delete(new Path(root, gen), true)
-        Some((vs.last, false))
-      } else {
-        val next = vs.lastOption.getOrElse(0L) + 1
-        // a streaming commit is an append: the shared appendCarry keeps
-        // the prior generations and their carried headers
-        val (dirs, carried) =
-          if (vs.isEmpty) (entries, Map.empty[String, String])
-          else {
-            val (prev, prevCarry) = appendCarry(spark, root, vs.last)
-            (prev ++ entries, prevCarry)
-          }
-        if (tryPublish(spark, root, next, dirs, carried ++ meta)) Some((next, true))
-        else None
+    // a streaming commit is an append (appendOnto); past the base, a
+    // racing replay may have won — then this copy must not land
+    publish(spark, root, base, Seq(gen), PastAny) { tip =>
+      Option.unless(tip.v > base.v && absorbed(versions(spark, root))) {
+        val (dirs, carried) = appendOnto(tip, entries)
+        (dirs, carried ++ meta)
       }
-    }
+    }.fold((versions(spark, root).last, false))(p => (p.v, true))
   }
 
   /** Reclaim storage: delete data generations no RETAINED snapshot
@@ -3745,7 +3682,7 @@ object VersionedTable {
       }).toSet
     val keep = (vs.takeRight(math.max(1, keepVersions)).filter(v =>
       v == vs.last || olderThanMicros.forall(cut =>
-        commitTimestamp(spark, root, v) > cut)) ++
+        tsOf(spark, root, v, manifestMeta(spark, root, v)) > cut)) ++
       vs.filter(tagged.contains)).distinct.sorted
     val dropVs = vs.filterNot(keep.contains)
     // a snapshot references its data generations, its deletion-vector
@@ -3911,7 +3848,8 @@ object VersionedTable {
         // express row removal, so refuse loudly (the overwrite rule's
         // twin). Rewrites are exempt above: compaction APPLIES the DVs it
         // clears, so content across it is unchanged.
-        require(dvHeaders(spark, root, v) == dvHeaders(spark, root, prev),
+        require(dvHeadersOf(manifestMeta(spark, root, v)) ==
+            dvHeadersOf(manifestMeta(spark, root, prev)),
           s"readChanges: commit v$v changed deletion vectors (row removal)" +
             " — use snapshot diff for merge-on-read histories")
         after.filterNot(before.contains)
@@ -4052,7 +3990,8 @@ object VersionedTable {
         val prev = vs.filter(_ < v).last
         val before = manifestDirs(spark, root, prev)
         val after = manifestDirs(spark, root, v)
-        val kind = commitKind(spark, root, v).stripSuffix("+txn")
+        val kind = kindOf(Some(before), after, manifestMeta(spark, root, v))
+          .stripSuffix("+txn")
         if (kind == "replace_partitions") {
           val delta = after.filterNot(before.contains) ++
             before.filterNot(after.contains)
@@ -4066,7 +4005,8 @@ object VersionedTable {
           require(before.forall(after.contains),
             s"readChangesPartition: commit v$v is an overwrite (dropped " +
               "generations) — use snapshot diff for non-append histories")
-          require(dvHeaders(spark, root, v) == dvHeaders(spark, root, prev),
+          require(dvHeadersOf(manifestMeta(spark, root, v)) ==
+            dvHeadersOf(manifestMeta(spark, root, prev)),
             s"readChangesPartition: commit v$v changed deletion vectors " +
               "(row removal) — use snapshot diff")
           // keep only leaves of the subscribed partition; entries
@@ -4102,8 +4042,8 @@ object VersionedTable {
     val added = steps.flatMap { v =>
       val prev = vs.filter(_ < v).last
       val before = manifestDirs(spark, root, prev)
-      val after = manifestDirs(spark, root, v)
-      val kind = commitKind(spark, root, v).stripSuffix("+txn")
+      val (after, meta) = manifestOf(spark, root, v)
+      val kind = kindOf(Some(before), after, meta).stripSuffix("+txn")
       // wap_publish is append-shaped by construction (fastForward only
       // ADDS the branch's staged generations): the lenient appends feed
       // must deliver WAP-published rows like any other arrival
@@ -4183,10 +4123,11 @@ object VersionedTable {
       (fit(a), fit(b))
     }
     val parts = vs.filter(v => v > vFrom && v <= vTo).flatMap { v =>
-      val kind = commitKind(spark, root, v).stripSuffix("+txn")
       val (curDirs, curMeta) = manifestOf(spark, root, v)
       lazy val prev = vs.filter(_ < v).last
       lazy val prevDirs = manifestDirs(spark, root, prev)
+      val kind = kindOf(vs.find(_ < v).map(_ => prevDirs), curDirs, curMeta)
+        .stripSuffix("+txn")
       // RECORDED CDF wins over shape-diffing: the writer that attached
       // `cdf:` headers (or the `cdf_none` no-row-changes marker) knew
       // its exact row-level delta at commit time — serve it verbatim.
@@ -5108,13 +5049,13 @@ object VersionedTable {
         summary("snapshot_after_append", readAt(s, root, Some(afterAppend)))
       val dvAudit = s.range(1).select(lit("dv_audit").as("step"),
         lit(manifestDirs(s, root, v4).size.toLong).as("n_rows"),
-        lit(dvHeaders(s, root, v4).size.toLong).as("n_cust"),
+        lit(dvHeadersOf(manifestMeta(s, root, v4)).size.toLong).as("n_cust"),
         lit(nKeys).cast("double").as("revenue"))
       val v6 = compact(s, root)
         .getOrElse(sys.error("q120: compaction lost a race on a private table"))
       val compactAudit = s.range(1).select(lit("compact_audit").as("step"),
         lit(manifestDirs(s, root, v6).size.toLong).as("n_rows"),
-        lit(dvHeaders(s, root, v6).size.toLong).as("n_cust"),
+        lit(dvHeadersOf(manifestMeta(s, root, v6)).size.toLong).as("n_cust"),
         lit(null).cast("double").as("revenue"))
       postDelete
         .unionByName(postAppend)

@@ -96,7 +96,7 @@ class VTableSource extends RelationProvider with CreatableRelationProvider
         }
       val from = parameters.get("startingVersion").map(_.toLong)
         .orElse(tsVersion("startingTimestamp")(m =>
-          vs.find(v => VersionedTable.commitTimestamp(spark, path, v) >= m)))
+          VersionedTable.versionAtOrAfterTimestamp(spark, path, m)))
         .getOrElse(1L)
       val to = parameters.get("endingVersion").map(_.toLong)
         .orElse(tsVersion("endingTimestamp")(m =>
@@ -241,10 +241,8 @@ class VTableSource extends RelationProvider with CreatableRelationProvider
       .orElse(parameters.get("startingTimestamp").map { s =>
         val micros = VTableScans.parseTsMicros(s)
         val spark = sqlContext.sparkSession
-        val vs = VersionedTable.versions(spark, path)
-        vs.find(v =>
-          VersionedTable.commitTimestamp(spark, path, v) >= micros)
-          .getOrElse(vs.lastOption.getOrElse(0L) + 1)
+        VersionedTable.versionAtOrAfterTimestamp(spark, path, micros)
+          .getOrElse(VersionedTable.versions(spark, path).lastOption.getOrElse(0L) + 1)
       })
     new VTableCdcSource(sqlContext,
       sourceSchema(sqlContext, schema, providerName, parameters)._2,

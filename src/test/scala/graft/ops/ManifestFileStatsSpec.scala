@@ -5,13 +5,14 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
-import org.apache.hadoop.fs.{ContentSummary, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ContentSummary, FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A local filesystem that COUNTS metadata RPCs (listStatus /
   * getContentSummary) against data directories — the instrument behind
-  * the zero-listing pins below. Registered under the `cntfs` scheme via
+  * the zero-listing pins below — plus `_log` listings and manifest opens
+  * for the log-read pins. Registered under the `cntfs` scheme via
   * `fs.cntfs.impl`; raw (no checksum twin files) so the on-disk layout
   * matches what the engine writes through `file://`.
   */
@@ -26,15 +27,24 @@ class CountingLocalFs extends RawLocalFileSystem {
     CountingLocalFs.record("summary", f)
     super.getContentSummary(f)
   }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingLocalFs.record("open", f)
+    super.open(f, bufferSize)
+  }
 }
 
 object CountingLocalFs {
   val dataCalls = new AtomicInteger(0)
+  val logLists = new AtomicInteger(0)
+  val manifestOpens = new AtomicInteger(0)
   @volatile var armed = false
-  def record(kind: String, f: Path): Unit =
-    if (armed && f.toString.contains("/data/")) dataCalls.incrementAndGet()
+  def record(kind: String, f: Path): Unit = if (armed) {
+    if (kind != "open" && f.toString.contains("/data/")) dataCalls.incrementAndGet()
+    if (kind == "list" && f.getName == "_log") logLists.incrementAndGet()
+    if (kind == "open" && f.getName.endsWith(".commit")) manifestOpens.incrementAndGet()
+  }
   def measure[A](body: => A): (A, Int) = {
-    dataCalls.set(0); armed = true
+    Seq(dataCalls, logLists, manifestOpens).foreach(_.set(0)); armed = true
     try { val a = body; (a, dataCalls.get()) } finally armed = false
   }
 }
@@ -185,5 +195,23 @@ class ManifestFileStatsSpec extends SparkSpec {
     assert(kept == 2 && bytes > 0L)
     assert(VersionedTable.scanRowCount(spark, t, None, Nil, Nil)
       .contains(400L))
+  }
+
+  test("history lists the log once and opens each manifest once") {
+    val t = freshTable("history")
+    val kv = spark.range(0, 10).select(col("id").as("k"))
+    VersionedTable.commit(spark, t, kv, overwrite = true)        // create
+    VersionedTable.commit(spark, t, kv, overwrite = false)       // append
+    VersionedTable.setProperties(spark, t, Map("owner" -> "x"))  // stamped
+    VersionedTable.commit(spark, t, kv, overwrite = true)        // overwrite
+    val (rows, _) = CountingLocalFs.measure {
+      VersionedTable.history(spark, t).collect()
+    }
+    assert(rows.map(_.getString(1)).toSeq ==
+      Seq("create", "append", "set_properties", "overwrite"))
+    assert(CountingLocalFs.logLists.get == 1,
+      s"history listed _log ${CountingLocalFs.logLists.get} times")
+    assert(CountingLocalFs.manifestOpens.get == 4,
+      s"history opened manifests ${CountingLocalFs.manifestOpens.get} times")
   }
 }

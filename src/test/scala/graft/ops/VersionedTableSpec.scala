@@ -1,9 +1,21 @@
 package graft.ops
 
+import java.net.URI
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.sql.functions._
+
+/** Hadoop's stock local filesystem under its own scheme (`rawfs`), so a
+  * spec can see what `rename` does there: a POSIX rename that replaces an
+  * existing target. (`file:` may resolve to a subclass that refuses an
+  * existing target, which would hide a commit point relying on it.)
+  */
+class StockLocalFs extends RawLocalFileSystem {
+  override def getScheme: String = "rawfs"
+  override def getUri: URI = URI.create("rawfs:///")
+}
 
 class VersionedTableSpec extends SparkSpec {
 
@@ -154,7 +166,8 @@ class VersionedTableSpec extends SparkSpec {
       .flatMap(v => VersionedTable.manifestDirs(spark, root, v) ++
         VersionedTable.manifestMeta(spark, root, v).keys
           .filter(_.startsWith("dv:")).map(_.stripPrefix("dv:"))).toSet
-    val onDisk = Option(new java.io.File(s"$root/data").listFiles())
+    val local = new org.apache.hadoop.fs.Path(root).toUri.getPath
+    val onDisk = Option(new java.io.File(s"$local/data").listFiles())
       .getOrElse(Array.empty[java.io.File])
       .map(f => s"data/${f.getName}").toSet
     assert(onDisk == referenced, s"orphaned generations: ${onDisk diff referenced}")
@@ -1949,9 +1962,47 @@ class VersionedTableSpec extends SparkSpec {
       "readAtPartition" ->
         (() => VersionedTable.readAtPartition(spark, root, missing, "id=1")),
       "scanSizeBytes" ->
-        (() => VersionedTable.scanSizeBytes(spark, root, missing, Nil, Nil))
+        (() => VersionedTable.scanSizeBytes(spark, root, missing, Nil, Nil)),
+      "hasDeletionVectors" ->
+        (() => VersionedTable.hasDeletionVectors(spark, root, missing)),
+      "commitKind" -> (() => VersionedTable.commitKind(spark, root, missing.get)),
+      "commitTimestamp" ->
+        (() => VersionedTable.commitTimestamp(spark, root, missing.get))
     ).foreach { case (name, read) =>
       withClue(s"$name: ")(intercept[IllegalArgumentException](read()))
     }
+  }
+
+  test("on the stock local filesystem a losing publish never replaces a manifest") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.rawfs.impl", classOf[StockLocalFs].getName)
+    def rawRoot() = "rawfs:" + freshRoot()
+    // a compaction that loses v3 to a concurrent append must abort: a
+    // commit point that replaced v3 would drop the append's rows
+    val root = rawRoot()
+    VersionedTable.commit(spark, root, df(1), overwrite = true)
+    VersionedTable.commit(spark, root, df(2), overwrite = false)
+    val lost = VersionedTable.compact(spark, root, raceHook = () => {
+      VersionedTable.commit(spark, root, df(3), overwrite = false); ()
+    })
+    assert(lost.isEmpty, "losing compaction must abort, not replace v3")
+    assert(VersionedTable.versions(spark, root) == Seq(1L, 2L, 3L))
+    assert(idsAt(root) == Set(1, 2, 3), "the concurrent append survived")
+    assertNoOrphans(root)
+    // a property edit that loses v2 to a violating append re-validates on
+    // the new tip instead of replacing it
+    import spark.implicits._
+    val root2 = rawRoot()
+    def kv(rows: (Int, Int)*) = rows.toDF("id", "v")
+    VersionedTable.commit(spark, root2, kv(1 -> 10), overwrite = true)
+    val e = intercept[IllegalArgumentException](
+      VersionedTable.setProperties(spark, root2,
+        Map("constraint.pos" -> "v > 0"),
+        raceHook = () => { VersionedTable.commit(spark, root2,
+          kv(2 -> -7), overwrite = false); () }))
+    assert(e.getMessage.contains("pos"))
+    assert(VersionedTable.versions(spark, root2) == Seq(1L, 2L))
+    assert(VersionedTable.readAt(spark, root2).count() == 2,
+      "the racing append survived")
   }
 }
