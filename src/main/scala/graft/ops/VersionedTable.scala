@@ -136,14 +136,6 @@ object VersionedTable {
     Snapshot(ver, dirs, meta)
   }
 
-  // the tip of a table an operation requires to exist (`what` names the
-  // operation in the refusal)
-  private def tipFor(spark: SparkSession, root: String, what: String): Snapshot = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"VersionedTable: nothing to $what at $root")
-    snapshotIn(spark, root, vs, None)
-  }
-
   // a resolved snapshot's rows: its entries read by name, minus the rows
   // its deletion vectors tombstone
   private def readSnapshot(spark: SparkSession, root: String,
@@ -535,10 +527,11 @@ object VersionedTable {
     * undo or drop a concurrent writer's commit. */
   private case object AtBase extends Rebase
 
-  /** Always: the manifest is rebuilt on each new tip — for commits whose
-    * intent does not depend on what landed meanwhile (`commit`,
-    * `idempotentCommit`, `editTip`). Losing every attempt throws
-    * `publish contention`. */
+  /** Always: every attempt, the first included, rebuilds the manifest on
+    * the tip it lists (never on a base resolved before a long write, whose
+    * base+1 a vacuum may have trimmed) — for commits whose intent does not
+    * depend on what landed meanwhile (`commit`, `idempotentCommit`,
+    * `editTip`). Losing every attempt throws `publish contention`. */
   private case object PastAny extends Rebase
 
   /** Only when `ok` accepts every intervening commit (a logical-conflict
@@ -558,15 +551,15 @@ object VersionedTable {
   private val PublishAttempts = 20
 
   // THE publish primitive: every `_log` manifest, main or branch, lands
-  // here. Each attempt builds the manifest on `on` (first the caller's
-  // `base`, or for PastIf the newest tip its check accepts; after a loss
-  // the new tip, as `rebase` allows), stamps the IN-COMMIT timestamp
-  // (`#ts=` epoch micros, clamped strictly after `on`'s so version order
-  // and timestamp order never disagree under clock skew) and creates
-  // manifest `file(on.v + 1)` iff absent. Returns the published snapshot,
-  // or None when it aborted or `manifest` gave up (returned None); an
-  // abort, None or the contention error, deletes the generations this
-  // call wrote (`wrote`).
+  // here. Each attempt builds the manifest on `on` (the caller's `base`;
+  // for PastAny the listed tip; for PastIf the newest tip its check
+  // accepts; after a loss the new tip, as `rebase` allows), stamps the
+  // IN-COMMIT timestamp (`#ts=` epoch micros, clamped strictly after
+  // `on`'s so version order and timestamp order never disagree under
+  // clock skew) and creates manifest `file(on.v + 1)` iff absent. Returns
+  // the published snapshot, or None when it aborted or `manifest` gave up
+  // (returned None). Whatever ends a call without a publish, exceptions
+  // included, deletes the generations this call wrote (`wrote`).
   private def publish(spark: SparkSession, root: String, base: Snapshot,
       wrote: Seq[String], rebase: Rebase,
       file: Long => String = v => s"$v.commit")(
@@ -574,6 +567,11 @@ object VersionedTable {
       : Option[Snapshot] = {
     val hfs = fs(spark, root)
     def reclaim(): Unit = wrote.foreach(g => hfs.delete(new Path(root, g), true))
+    // the tip as listed now: `base` itself when nothing landed since
+    def tip(): Snapshot = {
+      val vs = versions(spark, root)
+      if (vs.lastOption.forall(_ == base.v)) base else snapshotIn(spark, root, vs, None)
+    }
     // the commits past `on`, each resolved once; the last of them when
     // `ok` accepts them all and the log above `on` has no gap
     def rebased(on: Snapshot, ok: Intervening => Boolean): Option[Snapshot] = {
@@ -599,11 +597,10 @@ object VersionedTable {
           Some(Snapshot(on.v + 1, dirs, stamped))
         else (rebase, n < PublishAttempts) match {
           case (PastAny, false) =>
-            reclaim()
             throw new java.io.IOException(s"VersionedTable: publish contention at $root")
-          case (PastAny, true) => attempt(n + 1, snapshot(spark, root, None))
+          case (PastAny, true) => attempt(n + 1, tip())
           case (PastIf(ok), true) => rebased(on, ok) match {
-            case Some(tip) => attempt(n + 1, tip)
+            case Some(next) => attempt(n + 1, next)
             case None => None
           }
           case _ => None
@@ -612,10 +609,21 @@ object VersionedTable {
     // a conditional rebase first checks what landed past the base before
     // it publishes (the base need not be the tip: a fork point is not)
     val first = rebase match {
+      case AtBase => Some(base)
+      case PastAny => Some(tip())
       case PastIf(ok) => rebased(base, ok)
-      case _ => Some(base)
     }
-    first.flatMap(attempt(1, _)).orElse { reclaim(); None }
+    try first.flatMap(attempt(1, _)).orElse { reclaim(); None }
+    catch { case scala.util.control.NonFatal(e) => reclaim(); throw e }
+  }
+
+  // the local file a path names when `hfs` is, or wraps, the local one
+  private[ops] def localFileOf(hfs: org.apache.hadoop.fs.FileSystem)
+      : Option[Path => java.io.File] = hfs match {
+    case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(p =>
+      r.pathToFile(Path.getPathWithoutSchemeAndAuthority(hfs.makeQualified(p))))
+    case f: org.apache.hadoop.fs.FilterFileSystem => localFileOf(f.getRawFileSystem)
+    case _ => None
   }
 
   // THE commit point: create `_log/<file>` iff absent, atomically; false
@@ -623,28 +631,25 @@ object VersionedTable {
   // temp file first. On the local filesystem the temp is HARD-LINKED to
   // the target — `link(2)` fails when the target exists — because
   // `RawLocalFileSystem.rename` is a POSIX rename that REPLACES an
-  // existing target (and the `file:` wrapper some jars register only
+  // existing target (and the `file:` subclass some jars register only
   // checks before it renames); elsewhere the rename's refusal of an
-  // existing target is the commit point.
+  // existing target is the commit point. Any other failure (a mount
+  // without hard links) propagates. The temp is always deleted; a delete
+  // that fails past the commit point leaves it to vacuum.
   private def createManifest(hfs: org.apache.hadoop.fs.FileSystem,
       root: String, file: String, dirs: Seq[String],
       meta: Map[String, String]): Boolean = {
     val tmp = new Path(root, s"_log/.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     val dst = new Path(root, s"_log/$file")
     val lines = meta.toSeq.sortBy(_._1).map { case (k, value) => s"#$k=$value" } ++ dirs
-    val out = hfs.create(tmp, false)
-    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    val local: Option[Path => java.io.File] = hfs match {
-      case l: org.apache.hadoop.fs.LocalFileSystem => Some(l.pathToFile)
-      case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(r.pathToFile)
-      case _ => None
-    }
-    val won = local.fold(hfs.rename(tmp, dst)) { file =>
-      try { java.nio.file.Files.createLink(file(dst).toPath, file(tmp).toPath); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    }
-    if (local.isDefined || !won) hfs.delete(tmp, false)
-    won
+    try {
+      val out = hfs.create(tmp, false)
+      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+      localFileOf(hfs).fold(hfs.rename(tmp, dst)) { file =>
+        try { java.nio.file.Files.createLink(file(dst).toPath, file(tmp).toPath); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      }
+    } finally scala.util.Try(hfs.delete(tmp, false))
   }
 
   // manifest header key carrying one generation's [min,max] for one
@@ -1620,7 +1625,7 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String,
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[Long] = {
-    val base @ Snapshot(_, baseDirs, baseMeta) = tipFor(spark, root, "compact")
+    val base @ Snapshot(_, baseDirs, baseMeta) = snapshot(spark, root, None)
     // one generation and no tombstones — already compact; with
     // outstanding deletion vectors, drop-column tombstones or widen
     // casts compaction is still meaningful even at one generation: it
@@ -1677,7 +1682,7 @@ object VersionedTable {
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
     require(smallBytes > 0, "compactSmall: smallBytes must be positive")
-    val base @ Snapshot(baseV, baseDirs, baseMeta) = tipFor(spark, root, "compact")
+    val base @ Snapshot(baseV, baseDirs, baseMeta) = snapshot(spark, root, None)
     val hfs = fs(spark, root)
     val small = baseDirs.filter(d =>
       hfs.getContentSummary(new Path(root, d)).getLength < smallBytes)
@@ -1899,7 +1904,7 @@ object VersionedTable {
     require(clusterCols.nonEmpty && clusterCols.size <= 2,
       "optimize: 1 sort column or 2 z-order columns")
     require(targetBytes > 0, "optimize: targetBytes must be positive")
-    val base @ Snapshot(_, baseDirs, baseMeta) = tipFor(spark, root, "optimize")
+    val base @ Snapshot(_, baseDirs, baseMeta) = snapshot(spark, root, None)
     val hfs = fs(spark, root)
     // size from the raw generations (DV key lists are negligible), but
     // cluster and publish the DV-APPLIED content — OPTIMIZE, like
@@ -1969,7 +1974,7 @@ object VersionedTable {
     require(clusterCols.nonEmpty && clusterCols.size <= 2,
       "optimizePartition: 1 sort column or 2 z-order columns")
     require(targetBytes > 0, "optimizePartition: targetBytes must be positive")
-    val base @ Snapshot(baseV, baseDirs, baseMeta) = tipFor(spark, root, "optimize")
+    val base @ Snapshot(baseV, baseDirs, baseMeta) = snapshot(spark, root, None)
     val (field, token) = boundPartSpec(baseMeta, partSpec)
     val hit = baseDirs.filter(d =>
       partValueOf(d, field.name).contains(Some(token)))
@@ -2036,7 +2041,7 @@ object VersionedTable {
       keyCol: String, statsCol: Option[String] = None,
       schemaEvolution: Boolean = false,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
-    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "merge into")
+    val base @ Snapshot(baseV, dirs, baseMeta) = snapshot(spark, root, None)
     requireFoldableDvs(baseMeta, keyCol) // refuse mixed-key DVs up front
     // MERGE SCHEMA EVOLUTION (Delta's autoMerge, behind an explicit
     // flag): source columns the table lacks fold the widen INTO the
@@ -2191,7 +2196,7 @@ object VersionedTable {
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
     require(Set("merge", "update", "delete").contains(kindHeader),
       s"applyRowDelta: unknown kind '$kindHeader'")
-    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "modify")
+    val base @ Snapshot(baseV, dirs, baseMeta) = snapshot(spark, root, None)
     val delStats = deleteKeys.agg(
       count(lit(1)), count(when(col(keyCol).isNull, 1))).head()
     val (nOps, nNullKeys) = (delStats.getLong(0), delStats.getLong(1))
@@ -2314,7 +2319,7 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, root: String, pred: Column,
       statsCol: Option[String] = None,
       raceHook: () => Unit = () => ()): Option[(Long, Long, Int, Int)] = {
-    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "delete from")
+    val base @ Snapshot(baseV, dirs, baseMeta) = snapshot(spark, root, None)
     // a delete composes with outstanding tombstones directly: detection
     // and the rewrite both run over the DV-APPLIED view (already-hidden
     // rows need no deleting and must not resurrect in the rewrite), and
@@ -3381,7 +3386,7 @@ object VersionedTable {
   def overwritePartitions(spark: SparkSession, root: String, df: DataFrame,
       statsCols: Seq[String] = Nil,
       raceHook: () => Unit = () => ()): Option[(Long, Int, Int)] = {
-    val base @ Snapshot(baseV, dirs, baseMeta) = tipFor(spark, root, "overwrite")
+    val base @ Snapshot(baseV, dirs, baseMeta) = snapshot(spark, root, None)
     val partFields = partitionFieldsOf(tablePropsOf(baseMeta))
     require(partFields.nonEmpty,
       "overwritePartitions: the table declares no partition columns — " +
@@ -3551,7 +3556,7 @@ object VersionedTable {
     */
   def deleteWhereMor(spark: SparkSession, root: String, pred: Column,
       keyCol: String, raceHook: () => Unit = () => ()): Option[(Long, Long)] = {
-    val base = tipFor(spark, root, "delete from")
+    val base = snapshot(spark, root, None)
     val keys = readSnapshot(spark, root, base)
       .filter(pred).select(col(keyCol)).distinct()
       // key lists are tombstones EVERY read anti-joins against: land

@@ -4,17 +4,39 @@ import java.net.URI
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 /** Hadoop's stock local filesystem under its own scheme (`rawfs`), so a
   * spec can see what `rename` does there: a POSIX rename that replaces an
   * existing target. (`file:` may resolve to a subclass that refuses an
   * existing target, which would hide a commit point relying on it.)
+  * [[StockLocalFs.onCreate]] is a seam into the files it creates.
   */
 class StockLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "rawfs"
   override def getUri: URI = URI.create("rawfs:///")
+  // the overload `create(path, overwrite)` reaches (manifest temps,
+  // _SUCCESS markers)
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize,
+      progress)
+    try StockLocalFs.onCreate(f)
+    catch { case e: Throwable => out.close(); throw e }
+    out
+  }
+}
+
+object StockLocalFs {
+  // runs after a create, the file already there; may throw
+  @volatile var onCreate: Path => Unit = _ => ()
+  def withOnCreate[A](hook: Path => Unit)(body: => A): A = {
+    onCreate = hook
+    try body finally onCreate = _ => ()
+  }
 }
 
 class VersionedTableSpec extends SparkSpec {
@@ -1973,10 +1995,13 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
-  test("on the stock local filesystem a losing publish never replaces a manifest") {
+  private def rawRoot(): String = {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.rawfs.impl", classOf[StockLocalFs].getName)
-    def rawRoot() = "rawfs:" + freshRoot()
+    "rawfs:" + freshRoot()
+  }
+
+  test("on the stock local filesystem a losing publish never replaces a manifest") {
     // a compaction that loses v3 to a concurrent append must abort: a
     // commit point that replaced v3 would drop the append's rows
     val root = rawRoot()
@@ -2004,5 +2029,57 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.versions(spark, root2) == Seq(1L, 2L))
     assert(VersionedTable.readAt(spark, root2).count() == 2,
       "the racing append survived")
+  }
+
+  test("the default local filesystem publishes through the hard-link commit point") {
+    val hfs = new Path(freshRoot())
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(VersionedTable.localFileOf(hfs).isDefined,
+      s"${hfs.getClass.getName} would publish by rename")
+  }
+
+  test("an append lands at the tip even when its base was vacuumed during the write") {
+    // the generation write's _SUCCESS marker is created after the commit
+    // resolved its base and before it publishes: two appends land there
+    // and a vacuum trims every manifest but the newest, base+1 included
+    def race(root: String): Path => Unit = {
+      var fired = false
+      p => if (!fired && p.getName == "_SUCCESS") {
+        fired = true
+        VersionedTable.commit(spark, root, df(2), overwrite = false)
+        VersionedTable.commit(spark, root, df(3), overwrite = false)
+        VersionedTable.vacuum(spark, root, keepVersions = 1)
+      }
+    }
+    val root = rawRoot()
+    VersionedTable.commit(spark, root, df(1), overwrite = true)
+    val v = StockLocalFs.withOnCreate(race(root)) {
+      VersionedTable.commit(spark, root, df(4), overwrite = false)
+    }
+    assert(v == 4L && VersionedTable.versions(spark, root) == Seq(3L, 4L))
+    assert(idsAt(root) == Set(1, 2, 3, 4), "the commit's rows are at the tip")
+    val root2 = rawRoot()
+    VersionedTable.commit(spark, root2, df(1), overwrite = true)
+    val (v2, committed) = StockLocalFs.withOnCreate(race(root2)) {
+      VersionedTable.idempotentCommit(spark, root2, df(4), "app", 0L)
+    }
+    assert(committed && v2 == 4L)
+    assert(idsAt(root2) == Set(1, 2, 3, 4), "the batch's rows are at the tip")
+  }
+
+  test("a commit point that throws reclaims the temp manifest and the generation") {
+    val root = rawRoot()
+    VersionedTable.commit(spark, root, df(1), overwrite = true)
+    val e = StockLocalFs.withOnCreate { p =>
+      if (p.getName.startsWith(".tmp-")) throw new java.io.IOException("no links here")
+    } {
+      intercept[java.io.IOException](
+        VersionedTable.commit(spark, root, df(2), overwrite = false))
+    }
+    assert(e.getMessage == "no links here")
+    assert(VersionedTable.versions(spark, root) == Seq(1L))
+    val log = new java.io.File(new Path(root).toUri.getPath, "_log")
+    assert(!log.list().exists(_.startsWith(".tmp-")), "the temp manifest is gone")
+    assertNoOrphans(root)
   }
 }
