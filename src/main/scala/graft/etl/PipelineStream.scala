@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.streaming.MicroBatch
 import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,6 +19,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, 
   *   sees one page per trigger as pages arrive. The micro-batch's JSON is
   *   parsed once, persisted, and its three tables are written concurrently
   *   from that one parse (see [[PipelineBatch.writeStar]]).
+  * - The micro-batch runs in `spark`, the session passed to `start`, not
+  *   in the clone of it that Spark runs the query in. Generated code is
+  *   cached per executor class loader, and each session's tasks get their
+  *   own loader, so writes in a fresh clone would recompile every
+  *   task-side class on each `start()`; in the caller's session a repeated
+  *   drain compiles none (see [[graft.streaming.MicroBatch.inSession]]).
   * - Dim dedup stays per page, however many pages a micro-batch holds: each
   *   landed file is deduplicated on its own, as the reference's per-blob
   *   transform does (see [[SpotifyTransform.tables]]).
@@ -53,7 +60,8 @@ object PipelineStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PipelineBatch.writeStar(batch, perPage = true, outDir, batchId.toString)
+        PipelineBatch.writeStar(MicroBatch.inSession(spark, batch), perPage = true, outDir,
+          batchId.toString)
         ()
       }
       .start()

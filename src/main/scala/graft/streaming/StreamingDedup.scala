@@ -77,16 +77,17 @@ object StreamingDedup {
 
   /** Wire the gate into a stream of (doc_id, text). The session must run
     * with dynamic partition overwrite (set here) — static mode would
-    * truncate the whole table on every batch.
+    * truncate the whole table on every batch. Each micro-batch runs in the
+    * session of `docs` (see [[MicroBatch.inSession]]).
     */
   def start(docs: DataFrame, fpDir: String, acceptedDir: String,
       checkpointDir: String): StreamingQuery = {
-    docs.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val spark = docs.sparkSession
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch.sparkSession, batch, fpDir, acceptedDir, batchId)
+        processBatch(spark, MicroBatch.inSession(spark, batch), fpDir, acceptedDir, batchId)
         ()
       }
       .outputMode("append")

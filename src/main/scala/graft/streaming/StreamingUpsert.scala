@@ -51,13 +51,18 @@ object StreamingUpsert {
     graft.ops.AtomicDirSwap.commit(spark, tablePath)
   }
 
+  /** Each micro-batch merges in the session of `changes` (see
+    * [[MicroBatch.inSession]]).
+    */
   def start(changes: DataFrame, tablePath: String,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String): StreamingQuery = {
+    val spark = changes.sparkSession
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch.sparkSession, batch, tablePath)
+        mergeBatch(spark, MicroBatch.inSession(spark, batch), tablePath)
       }
       .outputMode("update")
       .start()
+  }
 }

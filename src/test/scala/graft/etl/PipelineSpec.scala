@@ -3,20 +3,24 @@ package graft.etl
 import graft.SparkSpec
 import java.net.URI
 import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.util.{Comparator, Properties}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.{FSDataInputStream, RawLocalFileSystem, Path => HPath}
 import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline tests: batch (json → 3 CSVs) and streaming
   * (inbox → per-batch outputs, source files archived), plus the stream's
-  * admission rule, the dedup scope of each path, JSON opens per page, and
-  * the concurrent table writes: their job tags, job count and failure path.
+  * admission rule, the dedup scope of each path, JSON opens per page, the
+  * concurrent table writes (their job tags, job count and failure path),
+  * compiled code reused across drains, and a restart after a crash before
+  * the archive step.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -186,20 +190,26 @@ class PipelineSpec extends SparkSpec {
     assert(OpenCountingFs.counts === once)
   }
 
-  /** The `spark.job.tags` of each Spark job started while `f` ran. */
-  private def jobTags(f: => Unit): Seq[Set[String]] = {
+  /** `f`'s result and the local properties of each Spark job started
+    * while it ran.
+    */
+  private def jobProps[T](f: => T): (T, Seq[Properties]) = {
     val sc = spark.sparkContext
-    val tags = new ConcurrentLinkedQueue[Set[String]]()
+    val props = new ConcurrentLinkedQueue[Properties]()
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        tags.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet))
+        props.add(Option(js.properties).getOrElse(new Properties()))
     }
     ListenerBusDrain(sc) // earlier jobs' events must not reach `l`
     sc.addSparkListener(l)
-    try { f; ListenerBusDrain(sc) } finally sc.removeSparkListener(l)
-    tags.asScala.toSeq
+    val r = try { val r = f; ListenerBusDrain(sc); r } finally sc.removeSparkListener(l)
+    (r, props.asScala.toSeq)
   }
+
+  /** The `spark.job.tags` of each Spark job started while `f` ran. */
+  private def jobTags(f: => Unit): Seq[Set[String]] =
+    jobProps(f)._2.map(p =>
+      Option(p.getProperty("spark.job.tags")).fold(Set.empty[String])(_.split(",").toSet))
 
   test("each run's write jobs carry the caller's job tag; a run takes at most 7 jobs") {
     val in = tmpDir("graft-tags")
@@ -230,6 +240,66 @@ class PipelineSpec extends SparkSpec {
     assert(committed(ckpt) === Seq("0"))
     assert(jobs.nonEmpty && jobs.forall(_.intersect(ours) == Set("graft-etl-stream")), jobs)
     assert(jobs.size <= 7, s"jobs per micro-batch: ${jobs.size}")
+  }
+
+  test("a repeated AvailableNow drain compiles no code and runs in the query's job group") {
+    def drain(name: String): (StreamingQuery, Seq[Properties], Long) = {
+      val inbox = tmpDir(s"graft-$name")
+      Seq("p1.json", "p2.json").foreach(n =>
+        Files.copy(java.nio.file.Paths.get(fixture), inbox.resolve(n)))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (q, jobs) = jobProps {
+        val q = PipelineStream.start(spark, inbox.toString, tmpDir(s"graft-$name-out").toString,
+          tmpDir(s"graft-$name-archive").toString, tmpDir(s"graft-$name-ckpt").toString)
+        q.awaitTermination()
+        q
+      }
+      (q, jobs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
+    }
+
+    drain("codegen-warm") // fills the code cache
+    val (q, jobs, compiles) = drain("codegen")
+    assert(compiles === 0, "classes compiled by a repeated drain")
+    assert(jobs.nonEmpty && jobs.forall(_.getProperty("spark.jobGroup.id") == q.runId.toString),
+      jobs.map(_.getProperty("spark.jobGroup.id")))
+  }
+
+  test("a restart after a crash between commit and archive reprocesses nothing") {
+    val inbox = tmpDir("graft-crash")
+    Seq("p1.json", "p2.json").foreach(n =>
+      Files.copy(java.nio.file.Paths.get(fixture), inbox.resolve(n)))
+    val out = tmpDir("graft-crash-out")
+    val archive = tmpDir("graft-crash-archive")
+    val ckpt = tmpDir("graft-crash-ckpt")
+    def drain(): StreamingQuery = {
+      val q = PipelineStream.start(spark, inbox.toString, out.toString, archive.toString,
+        ckpt.toString)
+      q.awaitTermination()
+      q
+    }
+
+    val first = drain()
+    val lines = EtlMain.batchLines(first)
+    assert(lines.size === 1 &&
+      lines.head.matches("""\{"batch":0,"pages":2,"add_batch_ms":\d+,"trigger_ms":\d+}"""), lines)
+    assert(jsonFiles(inbox).isEmpty)
+    // the state a crash before the archive step leaves: batch 0 committed,
+    // its pages still in the inbox
+    val archived = Files.walk(archive)
+    try archived.iterator().asScala.filter(_.toString.endsWith(".json")).toList
+      .foreach(f => Files.move(f, inbox.resolve(f.getFileName)))
+    finally archived.close()
+    assert(jsonFiles(inbox) === Seq("p1.json", "p2.json"))
+
+    assert(EtlMain.batchLines(drain()).isEmpty)
+    assert(committed(ckpt) === Seq("0"))
+    for (table <- Seq("song", "artist", "album")) {
+      val runs = Files.list(out.resolve(s"${table}_data"))
+      try assert(runs.iterator().asScala.map(_.getFileName.toString).toSeq === Seq("run=0"))
+      finally runs.close()
+    }
+    assert(jsonFiles(archive) === Seq("p1.json", "p2.json"))
+    assert(jsonFiles(inbox).isEmpty)
   }
 
   test("a failing table write fails the run with no job left running and nothing persisted") {
