@@ -24,7 +24,10 @@ object GraftSession {
     *     The process-wide schema caches (`Q.t`'s input cache,
     *     `VersionedTable`'s genSchemaCache) rely on every session in the
     *     JVM pinning it identically.
-    * AQE is left at Spark's default, which is on.
+    * AQE is left at Spark's default, which is on. The local filesystem
+    * is not set here: `core-site.xml` (a resource of this library)
+    * registers `graft.fs.NioLocalFileSystem` for `file:`, so sessions
+    * built elsewhere get it too.
     */
   def builder(cpus: Int): SparkSession.Builder =
     SparkSession.builder()

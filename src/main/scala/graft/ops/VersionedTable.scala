@@ -61,6 +61,8 @@ object VersionedTable {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val CommitRe = """(\d+)\.commit""".r
+  // any log file's version: main (`<n>.commit`) or branch (`b.<name>.<n>.commit`)
+  private val LogFileRe = """(?:.*\.)?(\d+)\.commit""".r
 
   /** Committed versions, ascending (empty for a nonexistent table). */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
@@ -520,11 +522,13 @@ object VersionedTable {
     * the commits that took it. */
   private sealed trait Rebase
 
-  /** Never: publish only at base+1, and a loss aborts. For commits whose
-    * content baked in the base snapshot — compact, compactSmall,
-    * optimize, optimizePartition, deleteWhere, deleteWhereMor, restore,
-    * createIfAbsent and the branch commits; landing later could silently
-    * undo or drop a concurrent writer's commit. */
+  /** Never: publish only at base+1 while the log holds no later version
+    * (a vacuum may have trimmed base+1 under newer commits), and a loss
+    * aborts. For commits whose content baked in the base snapshot —
+    * compact, compactSmall, optimize, optimizePartition, deleteWhere,
+    * deleteWhereMor, restore, createIfAbsent and the branch commits;
+    * landing later could silently undo or drop a concurrent writer's
+    * commit. */
   private case object AtBase extends Rebase
 
   /** Always: every attempt, the first included, rebuilds the manifest on
@@ -606,10 +610,18 @@ object VersionedTable {
           case _ => None
         }
     }
-    // a conditional rebase first checks what landed past the base before
-    // it publishes (the base need not be the tip: a fork point is not)
+    // a version above `v` in the log `file` names: `_log/<n>.commit` for
+    // main, `b.<name>.<n>.commit` for one branch; a constant `file` (a
+    // branch's first manifest, numbered by its fork point) names none
+    def landedAbove(v: Long): Boolean =
+      try hfs.listStatus(new Path(root, "_log")).map(_.getPath.getName).exists {
+        case name @ LogFileRe(n) => n.toLong > v && file(n.toLong) == name
+        case _ => false
+      } catch { case _: java.io.FileNotFoundException => false }
+    // AtBase lands only on the tip; a conditional rebase first checks
+    // what landed past the base before it publishes
     val first = rebase match {
-      case AtBase => Some(base)
+      case AtBase => Option.unless(landedAbove(base.v))(base)
       case PastAny => Some(tip())
       case PastIf(ok) => rebased(base, ok)
     }
@@ -618,7 +630,7 @@ object VersionedTable {
   }
 
   // the local file a path names when `hfs` is, or wraps, the local one
-  private[ops] def localFileOf(hfs: org.apache.hadoop.fs.FileSystem)
+  private[graft] def localFileOf(hfs: org.apache.hadoop.fs.FileSystem)
       : Option[Path => java.io.File] = hfs match {
     case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(p =>
       r.pathToFile(Path.getPathWithoutSchemeAndAuthority(hfs.makeQualified(p))))

@@ -1089,28 +1089,27 @@ object VTableViews {
       s".tmp-view-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = hfs.create(tmp, false)
     try out.write(sql.getBytes("UTF-8")) finally out.close()
-    // ATOMIC either way: create-only rename for a fresh view (a racing
-    // duplicate create loses loudly, never clobbers), FileContext's
-    // OVERWRITE rename for replace (a delete-then-rename pair would
-    // leave a window where the view doesn't resolve at all, and a crash
-    // inside it would lose the old definition without landing the new)
-    if (!replace) {
-      if (!hfs.rename(tmp, p)) {
+    // ATOMIC either way, through FileContext's rename: NONE for a fresh
+    // view refuses an existing target (a racing duplicate create loses
+    // loudly, never clobbers; `FileSystem.rename` on the local filesystem
+    // would replace it), OVERWRITE for replace (a delete-then-rename pair
+    // would leave a window where the view doesn't resolve at all, and a
+    // crash inside it would lose the old definition without landing the
+    // new)
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      p.toUri, spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.Options.Rename
+    try fc.rename(tmp, p, if (replace) Rename.OVERWRITE else Rename.NONE)
+    catch {
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
         hfs.delete(tmp, false)
         throw new IllegalStateException(
           s"graft-vtable: view $file lost a creation race — re-run or " +
-            "pass replace => true")
-      }
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      try fc.rename(tmp, p,
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch { case e: java.io.IOException =>
+            "pass replace => true", e)
+      case e: java.io.IOException =>
         hfs.delete(tmp, false)
         throw new IllegalStateException(
           s"graft-vtable: view publish failed at $file — re-run", e)
-      }
     }
   }
 

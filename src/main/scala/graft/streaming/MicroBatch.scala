@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.graftops.Bridge
 
-/** Where a `foreachBatch` body runs its micro-batch. */
+/** Where a `foreachBatch` body runs its micro-batch, and what it reads of
+  * the table earlier micro-batches wrote. */
 object MicroBatch {
 
   /** `batch`, the frame a `foreachBatch` body receives, rebuilt over the
@@ -35,4 +37,18 @@ object MicroBatch {
     */
   private[graft] def inSession(spark: SparkSession, batch: DataFrame): DataFrame =
     Bridge.ofRows(spark, batch.queryExecution.logical)
+
+  /** The parquet table at `path`, or None before a first batch wrote it.
+    * The path is checked first: a read of a missing path fails with
+    * `PATH_NOT_FOUND`, and every `QueryExecutionListener` of the session
+    * sees that failure (Spark's observation listener logs it as an ERROR
+    * with a stack trace). A directory whose schema cannot be inferred
+    * (one with no parquet file yet) counts as not written.
+    */
+  private[graft] def written(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(spark.read.parquet(path))
+    catch { case _: AnalysisException => None }
+  }
 }

@@ -51,13 +51,9 @@ object StreamingDedup {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val withFp = batch.select(col("doc_id"), col("text"),
       fingerprint(col("text")).as("fp"))
-    val seen =
-      try spark.read.parquet(fpDir)
-        .filter(col("batch_id") =!= batchId)
-        .select(col("fp"))
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        withFp.select(col("fp")).limit(0) // first batch: nothing seen yet
-      }
+    val seen = MicroBatch.written(spark, fpDir)
+      .map(_.filter(col("batch_id") =!= batchId).select(col("fp")))
+      .getOrElse(withFp.select(col("fp")).limit(0)) // first batch: nothing seen yet
     val wB = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     val novel = withFp
       .withColumn("__rn", row_number().over(wB))

@@ -33,11 +33,8 @@ object StreamingUpsert {
     // crash recovery + checked-rename swap live in AtomicDirSwap (shared
     // with the file compactor)
     graft.ops.AtomicDirSwap.recover(spark, tablePath)
-    val existing =
-      try spark.read.parquet(tablePath)
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        batch.limit(0) // first batch: empty table with the batch schema
-      }
+    // first batch: empty table with the batch schema
+    val existing = MicroBatch.written(spark, tablePath).getOrElse(batch.limit(0))
     val w = Window.partitionBy(col("key"))
       .orderBy(col("ts").desc, col("change_id").desc)
     val merged = existing.unionByName(batch)

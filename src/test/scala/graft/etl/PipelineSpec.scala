@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkSpec, Spawns}
 import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.{Comparator, Properties}
@@ -19,8 +19,8 @@ import scala.jdk.CollectionConverters._
   * (inbox → per-batch outputs, source files archived), plus the stream's
   * admission rule, the dedup scope of each path, JSON opens per page, the
   * concurrent table writes (their job tags, job count and failure path),
-  * compiled code reused across drains, and a restart after a crash before
-  * the archive step.
+  * compiled code reused across drains, a restart after a crash before
+  * the archive step, and the processes a run forks.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -262,6 +262,21 @@ class PipelineSpec extends SparkSpec {
     assert(compiles === 0, "classes compiled by a repeated drain")
     assert(jobs.nonEmpty && jobs.forall(_.getProperty("spark.jobGroup.id") == q.runId.toString),
       jobs.map(_.getProperty("spark.jobGroup.id")))
+  }
+
+  test("a batch run and an AvailableNow drain fork no chmod or readlink") {
+    val in = tmpDir("graft-spawns")
+    Seq("p1.json", "p2.json").foreach(n =>
+      Files.copy(java.nio.file.Paths.get(fixture), in.resolve(n)))
+    val (_, batch) = Spawns.during(
+      PipelineBatch.run(spark, in.toString, tmpDir("graft-spawns-out").toString, "s"))
+    val ckpt = tmpDir("graft-spawns-ckpt")
+    val (_, stream) = Spawns.during(
+      PipelineStream.start(spark, in.toString, tmpDir("graft-spawns-sout").toString,
+        tmpDir("graft-spawns-archive").toString, ckpt.toString).awaitTermination())
+    assert(committed(ckpt) === Seq("0"))
+    assert(Seq(batch, stream).forall(s => !s.contains("chmod") && !s.contains("readlink")),
+      s"batch run: $batch; stream drain: $stream")
   }
 
   test("a restart after a crash between commit and archive reprocesses nothing") {

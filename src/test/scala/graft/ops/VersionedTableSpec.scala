@@ -3,7 +3,7 @@ package graft.ops
 import java.net.URI
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{SparkSpec, Spawns}
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
@@ -2036,6 +2036,34 @@ class VersionedTableSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(VersionedTable.localFileOf(hfs).isDefined,
       s"${hfs.getClass.getName} would publish by rename")
+  }
+
+  test("a commit on the default local filesystem forks no chmod or readlink") {
+    val root = freshRoot()
+    VersionedTable.commit(spark, root, df(1), overwrite = true)
+    val (v, spawns) = Spawns.during(VersionedTable.commit(spark, root, df(2), overwrite = false))
+    assert(v == 2L && idsAt(root) == Set(1, 2))
+    assert(!spawns.contains("chmod") && !spawns.contains("readlink"), spawns)
+  }
+
+  test("a rewrite whose base+1 was vacuumed under newer commits aborts below the tip") {
+    val root = freshRoot()
+    VersionedTable.commit(spark, root, df(1, 2), overwrite = true)
+    val lost = VersionedTable.deleteWhere(spark, root, col("id") === 1, raceHook = () => {
+      VersionedTable.commit(spark, root, df(3), overwrite = false)
+      VersionedTable.commit(spark, root, df(4), overwrite = false)
+      VersionedTable.vacuum(spark, root, keepVersions = 1); ()
+    })
+    assert(lost.isEmpty, "a delete built on v1 must not publish v2 below the tip")
+    assert(VersionedTable.versions(spark, root) == Seq(3L))
+    assert(idsAt(root) == Set(1, 2, 3, 4), "the tip is unchanged")
+    assertNoOrphans(root)
+    // only the branch's own log bounds a branch commit, and a fork point
+    // below main's tip is no rewrite
+    VersionedTable.commit(spark, root, df(5), overwrite = false)
+    assert(VersionedTable.createBranch(spark, root, "past", Some(3L)) == 3L)
+    assert(VersionedTable.commitToBranch(spark, root, "past", df(6)) == 4L)
+    assert(VersionedTable.branchVersions(spark, root, "past") == Seq(3L, 4L))
   }
 
   test("an append lands at the tip even when its base was vacuumed during the write") {

@@ -4,15 +4,19 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One change-stream row for the upsert sink. */
 case class Change(key: Long, ts: Timestamp, change_id: Long, value: Double)
 
 /** Pins the streaming CDC apply: last-write-wins across micro-batches,
-  * inserts for new keys, updates for existing ones, and idempotent
-  * re-merge of an already-applied batch.
+  * inserts for new keys, updates for existing ones, idempotent re-merge of
+  * an already-applied batch, and a first batch (of the upsert and of the
+  * dedup gate) that fails no query.
   */
 class StreamingUpsertSpec extends SparkSpec {
 
@@ -59,5 +63,28 @@ class StreamingUpsertSpec extends SparkSpec {
       Seq(ch(7, 4, 200, 1.0), ch(7, 4, 201, 2.0)).toDF(), table)
     val row = spark.read.parquet(table).collect().head
     assert(row.getAs[Double]("value") === 2.0) // higher change_id wins
+  }
+
+  test("the first batch of an upsert or a dedup fails no query") {
+    import spark.implicits._
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        failures.add(s"$f: ${e.getMessage}")
+    }
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-first-batch").toString
+    ListenerBusDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      StreamingUpsert.mergeBatch(spark, Seq(ch(1, 1, 100, 10.0)).toDF(), s"$dir/t")
+      StreamingDedup.processBatch(spark, Seq(Doc(1, "alpha")).toDF(), s"$dir/fp",
+        s"$dir/acc", batchId = 0L)
+      ListenerBusDrain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(failures.isEmpty, failures)
+    assert(spark.read.parquet(s"$dir/t").select("key").as[Long].collect().toSeq === Seq(1L))
+    assert(spark.read.parquet(s"$dir/acc").select("doc_id").as[Long].collect().toSeq === Seq(1L))
   }
 }
