@@ -48,9 +48,12 @@ object PipelineBatch {
     * cancelling the caller's jobs cancels the writes too. The writes read
     * the same persisted frame: the block manager lets one task compute a
     * cached partition while the others wait for it, so each page is still
-    * parsed once. All three writes have finished when this returns, whether
-    * or not one failed; a failure rethrows the first failed table's error,
-    * in table order, with the others attached as suppressed.
+    * parsed once. A per-page dedup over unsplit pages shuffles nothing, so
+    * a stream micro-batch takes one job per table; a batch run's
+    * directory-wide dedup shuffles each dim, and takes up to seven jobs.
+    * All three writes have finished when this returns, whether or not one
+    * failed; a failure rethrows the first failed table's error, in table
+    * order, with the others attached as suppressed.
     */
   private[etl] def writeStar(landed: DataFrame, perPage: Boolean, outDir: String,
       runId: String): (Long, Long, Long) = {

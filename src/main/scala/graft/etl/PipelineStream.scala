@@ -27,7 +27,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, 
   *   drain compiles none (see [[graft.streaming.MicroBatch.inSession]]).
   * - Dim dedup stays per page, however many pages a micro-batch holds: each
   *   landed file is deduplicated on its own, as the reference's per-blob
-  *   transform does (see [[SpotifyTransform.tables]]).
+  *   transform does (see [[SpotifyTransform.tables]]). A multi-line JSON
+  *   page is never split, so each page is deduplicated in the partition it
+  *   was read into: a micro-batch writes its three tables with three jobs
+  *   and no shuffle.
   * - `cleanSource=archive` = the copy-then-delete move, but driven off the
   *   streaming checkpoint, so a crash between "processed" and "archived"
   *   cannot double-process — strictly better than the reference, which can

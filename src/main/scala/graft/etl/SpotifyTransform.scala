@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.plans.TopKPerKey
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,14 +14,17 @@ import org.apache.spark.sql.functions._
   *   - primary-artist only: `artists[0]` (`spotifytransform.py:43-45,61`);
   *   - keep-FIRST dedup of the dims in playlist order
   *     (`drop_duplicates(keep='first')`, `spotifytransform.py:95,98`) —
-  *     made deterministic and distributed via `posexplode` position +
-  *     `row_number` window, never bare `dropDuplicates`;
+  *     made deterministic via the `posexplode` position, never bare
+  *     `dropDuplicates` (see [[keepFirst]]);
   *   - `added_at` → timestamp (`spotifytransform.py:92`), multi-precision
   *     `release_date` → date (`spotifytransform.py:99`, see [[Dates]]).
   *
-  * Scale posture: everything below is narrow (explode + project) except the
-  * two dim dedups, which shuffle only the tiny projected dim columns hashed
-  * by their natural key — the fact table never shuffles.
+  * Scale posture: everything below is narrow (explode + project); the fact
+  * table never shuffles. A directory-wide dim dedup (batch) shuffles only
+  * the tiny projected dim columns, hashed by their natural key. A per-page
+  * dim dedup (stream) shuffles nothing when the plan proves each landed
+  * page lies whole in one partition, as a multi-line JSON scan does; it
+  * shuffles like the batch one otherwise.
   */
 object SpotifyTransform {
 
@@ -87,23 +91,29 @@ object SpotifyTransform {
     * `pos`) ordering columns. Ordering by `pos` alone would tie across
     * pages (it restarts per landed file) and let `row_number` pick an
     * arbitrary winner; the file discriminator keeps the choice stable
-    * across runs (see [[exploded]] for the ordering contract). Shuffles by
-    * `key` only; no global sort.
+    * across runs (see [[exploded]] for the ordering contract). A
+    * `row_number` window by `key`: one shuffle of the frame, no global sort.
     */
   def keepFirst(df: DataFrame, key: String): DataFrame = keepFirst(df, key, perPage = false)
 
   /** [[keepFirst]] by `key`, or by (`__src`, `key`) when `perPage`, so that
-    * each landed page is deduplicated on its own.
+    * each landed page is deduplicated on its own. A per-page dedup whose
+    * plan proves every page lies whole in one partition keeps each page's
+    * first rows in one partition-local pass, with no shuffle
+    * ([[graft.plans.TopKPerKey.localTopK]]); any other runs the window.
     */
   private def keepFirst(df: DataFrame, key: String, perPage: Boolean): DataFrame = {
     val ord =
       if (df.columns.contains("__src")) Seq(col("__src"), col("pos"))
       else Seq(col("pos")) // caller-supplied frames with a total `pos` order
     val part = if (perPage) Seq(col("__src"), col(key)) else Seq(col(key))
-    val w = Window.partitionBy(part: _*).orderBy(ord: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__src", "pos")
+    val local = if (perPage) TopKPerKey.localTopK(df, part, ord, 1) else None
+    local.fold {
+      val w = Window.partitionBy(part: _*).orderBy(ord: _*)
+      df.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn", "__src", "pos")
+    }(_.drop("__src", "pos"))
   }
 
   /** The three output tables of an [[exploded]] frame. `perPage` sets the

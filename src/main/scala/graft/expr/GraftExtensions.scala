@@ -62,11 +62,7 @@ object GraftFunctions {
         "dot_product", dotProductDescriptor._3, "built-in")
     // planner strategy for the custom per-key top-k physical operator
     // (idempotent, same reasoning as above)
-    if (!spark.experimental.extraStrategies
-        .exists(_.isInstanceOf[graft.plans.TopKPerKeyStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+
-          graft.plans.TopKPerKeyStrategy(spark)
+    graft.plans.TopKPerKey.install(spark)
     // optimizer rule routing the window-top-k idiom to that operator
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.WindowTopKRewrite))

@@ -52,7 +52,7 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
           if projList.forall(!_.references.contains(rn)) &&
             // every projected column must come from the window's child
             projList.forall(_.references.subsetOf(child.outputSet)) =>
-          Project(projList, TopKPerKeyNode(partSpec, orderSpec, k, child))
+          Project(projList, TopKPerKeyNode(partSpec, orderSpec, k, local = false, child))
         case _ => p
       }
   }

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.{SparkSpec, Spawns}
+import graft.plans.TopKPerKeyExec
 import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.{Comparator, Properties}
@@ -11,7 +12,12 @@ import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -19,7 +25,7 @@ import scala.jdk.CollectionConverters._
   * (inbox → per-batch outputs, source files archived), plus the stream's
   * admission rule, the dedup scope of each path, JSON opens per page, the
   * concurrent table writes (their job tags, job count and failure path),
-  * compiled code reused across drains, a restart after a crash before
+  * a micro-batch plan with no shuffle, compiled code reused across drains, a restart after a crash before
   * the archive step, and the processes a run forks.
   */
 class PipelineSpec extends SparkSpec {
@@ -233,13 +239,40 @@ class PipelineSpec extends SparkSpec {
     }
 
     val ckpt = tmpDir("graft-tags-ckpt")
-    val jobs = tagged("graft-etl-stream") {
-      PipelineStream.start(spark, in.toString, tmpDir("graft-tags-sout").toString,
-        tmpDir("graft-tags-archive").toString, ckpt.toString).awaitTermination()
+    val (jobs, plans) = executedPlans {
+      tagged("graft-etl-stream") {
+        PipelineStream.start(spark, in.toString, tmpDir("graft-tags-sout").toString,
+          tmpDir("graft-tags-archive").toString, ckpt.toString).awaitTermination()
+      }
     }
     assert(committed(ckpt) === Seq("0"))
     assert(jobs.nonEmpty && jobs.forall(_.intersect(ours) == Set("graft-etl-stream")), jobs)
-    assert(jobs.size <= 7, s"jobs per micro-batch: ${jobs.size}")
+    // each page is deduplicated in the partition it was read into: one job
+    // per table, no exchange, no window
+    assert(jobs.size <= 3, s"jobs per micro-batch: ${jobs.size}")
+    val nodes = plans.flatMap(p => Physical.collect(p) { case n => n })
+    assert(nodes.collect { case t: TopKPerKeyExec => t }.size === 2, plans)
+    assert(!nodes.exists(n => n.isInstanceOf[ShuffleExchangeExec] || n.isInstanceOf[WindowExec]),
+      plans)
+  }
+
+  private object Physical extends AdaptiveSparkPlanHelper
+
+  /** `f`'s result and the executed plan of each query the session ran
+    * while it ran.
+    */
+  private def executedPlans[T](f: => T): (T, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    spark.listenerManager.register(l)
+    val r = try { val r = f; ListenerBusDrain(sc); r } finally spark.listenerManager.unregister(l)
+    (r, plans.asScala.toSeq)
   }
 
   test("a repeated AvailableNow drain compiles no code and runs in the query's job group") {

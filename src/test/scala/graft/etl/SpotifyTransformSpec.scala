@@ -1,7 +1,11 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.plans.TopKPerKeyNode
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import java.sql.{Date, Timestamp}
 
 /** Golden-fixture test of the playlist ETL (SURVEY.md §5.1): pins explode,
@@ -106,33 +110,158 @@ class SpotifyTransformSpec extends SparkSpec {
     assert(again.count() === artists.count())
   }
 
+  /** `f` with the session's SQL conf `pairs` set, the old values restored after. */
+  private def withConf[T](pairs: (String, String)*)(f: => T): T = {
+    val conf = spark.conf
+    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** `f` without graft's window rewrite, as sessions that never register
+    * graft's rules (the benchmark harness, a library caller's own session)
+    * run it; the plans `f` inspects must be built inside it.
+    */
+  private def withoutRewrite[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules" -> graft.plans.WindowTopKRewrite.ruleName)(f)
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  private def dims(ex: DataFrame, perPage: Boolean): Seq[DataFrame] =
+    Seq(SpotifyTransform.artists(ex, perPage), SpotifyTransform.albums(ex, perPage))
+
+  private object Physical extends AdaptiveSparkPlanHelper
+
+  /** How `df` dedups: the Window, two-stage TopKPerKey and local TopKPerKey
+    * nodes of its optimized plan, and the exchanges of its executed plan.
+    */
+  private def shape(df: DataFrame): (Int, Int, Int, Int) = {
+    val plan = df.queryExecution.optimizedPlan
+    (plan.collect { case w: Window => w }.size,
+      plan.collect { case n: TopKPerKeyNode if !n.local => n }.size,
+      plan.collect { case n: TopKPerKeyNode if n.local => n }.size,
+      Physical.collect(df.queryExecution.executedPlan) { case e: Exchange => e }.size)
+  }
+
   test("keep-first dedup plans Window without the rewrite and TopKPerKey with it, same rows") {
-    // sessions that never register graft's rules (the benchmark harness,
-    // a library caller's own session) still run the Window path
-    val key = "spark.sql.optimizer.excludedRules"
-    def dims(perPage: Boolean): Seq[(Int, Int, Seq[String])] = {
-      val ex = SpotifyTransform.exploded(raw)
-      Seq(SpotifyTransform.artists(ex, perPage), SpotifyTransform.albums(ex, perPage))
-        .map { df =>
-          val plan = df.queryExecution.optimizedPlan
-          (plan.collect { case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.size,
-            plan.collect { case n: graft.plans.TopKPerKeyNode => n }.size,
-            df.collect().map(_.toString).toSeq.sorted)
-        }
+    val ex = SpotifyTransform.exploded(raw)
+    // directory-wide: the rewrite turns the window into the two-stage TopKPerKey
+    val rewritten = dims(ex, perPage = false).map(df => (shape(df), rows(df)))
+    val windowed = withoutRewrite(dims(ex, perPage = false).map(df => (shape(df), rows(df))))
+    rewritten.zip(windowed).foreach { case ((rs, rRows), (ws, wRows)) =>
+      assert(rs._1 === 0 && rs._2 > 0, "the rewrite must replace the Window")
+      assert(ws._1 > 0 && ws._2 === 0, "an excluded rewrite must keep the Window")
+      assert(rRows.nonEmpty && rRows === wRows)
     }
-    for (perPage <- Seq(false, true)) {
-      val rewritten = dims(perPage)
-      val saved = spark.conf.getOption(key)
-      spark.conf.set(key, graft.plans.WindowTopKRewrite.ruleName)
-      val windowed = try dims(perPage) finally saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      rewritten.zip(windowed).foreach { case ((rw, rk, rRows), (ww, wk, wRows)) =>
-        assert(rw === 0 && rk > 0, s"perPage=$perPage: rewrite must replace the Window")
-        assert(ww > 0 && wk === 0, s"perPage=$perPage: excluded rewrite must keep the Window")
-        assert(rRows.nonEmpty && rRows === wRows, s"perPage=$perPage")
+    // per page: a multi-line JSON scan reads each page whole into one
+    // partition, so each page is deduplicated in one local pass, with no
+    // Window and no Exchange, whether or not the rewrite runs
+    val windowRows = withoutRewrite(dims(ex.repartition(3), perPage = true).map { df =>
+      assert(shape(df)._1 > 0, "pages split across partitions must keep the Window")
+      rows(df)
+    })
+    for (rewrite <- Seq(true, false)) {
+      def local = dims(ex, perPage = true).map(df => (shape(df), rows(df)))
+      val got = if (rewrite) local else withoutRewrite(local)
+      got.zip(windowRows).foreach { case ((s, lRows), wRows) =>
+        assert(s === ((0, 0, 1, 0)), s"rewrite=$rewrite: one local pass, no Window, no Exchange")
+        assert(lRows.nonEmpty && lRows === wRows, s"rewrite=$rewrite")
       }
     }
+  }
+
+  /** One playlist item; `artist` is (id, name), or None for an empty
+    * `artists` array.
+    */
+  private def item(track: String, artist: Option[(String, String)], album: String): String = {
+    val artists = artist.fold("[]") { case (id, name) =>
+      s"""[{"id":"$id","name":"$name","external_urls":{"spotify":"u/$id/$track"}}]"""
+    }
+    s"""{"added_at":"2023-01-01T00:00:00Z","track":{"id":"$track","name":"T$track",
+       |"duration_ms":1,"popularity":1,"external_urls":{"spotify":"u"},
+       |"album":{"id":"$album","name":"album $album at $track","release_date":"2020",
+       |"total_tracks":1,"external_urls":{"spotify":"u/$album/$track"}},
+       |"artists":$artists}}""".stripMargin.replace("\n", "")
+  }
+
+  /** Three landed pages whose artists and albums repeat within and across
+    * pages, each with an item whose `artists` array is empty.
+    */
+  private lazy val pagesDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pages")
+    val pages = Seq(
+      Seq(item("1", Some("ar1" -> "one at 1"), "al1"), item("2", None, "al2"),
+        item("3", Some("ar1" -> "one at 3"), "al1"), item("4", Some("ar2" -> "two at 4"), "al2")),
+      Seq(item("5", Some("ar1" -> "one at 5"), "al1"), item("6", None, "al3"),
+        item("7", Some("ar2" -> "two at 7"), "al3")),
+      Seq(item("8", Some("ar3" -> "three at 8"), "al1"), item("9", None, "al9"),
+        item("10", Some("ar3" -> "three at 10"), "al1"), item("11", None, "al9")))
+    pages.zipWithIndex.foreach { case (items, i) =>
+      java.nio.file.Files.writeString(dir.resolve(s"page_$i.json"),
+        items.mkString("{\"items\":[", ",", "]}"))
+    }
+    dir.toString
+  }
+
+  test("per-page keep-first: the local pass keeps exactly the window's rows over many pages") {
+    // one page per partition (the default for small files), and pages
+    // packed together into fewer partitions
+    val layouts = Seq(Seq.empty[(String, String)],
+      Seq("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1"))
+    for (layout <- layouts) withConf(layout: _*) {
+      val ex = SpotifyTransform.exploded(spark.read.schema(Schemas.PlaylistSchema)
+        .option("multiLine", value = true).json(pagesDir))
+      val partitions = ex.rdd.getNumPartitions
+      assert(if (layout.isEmpty) partitions == 3 else partitions < 3, partitions)
+      val windowRows = withoutRewrite(dims(ex.repartition(3), perPage = true).map(rows))
+      val local = dims(ex, perPage = true)
+      local.zip(windowRows).foreach { case (df, wRows) =>
+        assert(shape(df)._3 === 1, s"$partitions partitions: the local pass")
+        assert(rows(df) === wRows, s"$partitions partitions")
+      }
+      val artists = local.head.collect()
+      // first of each artist per page, one null key per page
+      assert(artists.length === 8)
+      assert(artists.count(_.isNullAt(0)) === 3)
+      assert(artists.map(_.getString(1)).filter(_ != null).sorted.toSeq ===
+        Seq("one at 1", "one at 5", "three at 8", "two at 4", "two at 7"))
+      assert(local(1).collect().map(_.getString(1)).sorted.toSeq === Seq(
+        "album al1 at 1", "album al1 at 5", "album al1 at 8", "album al2 at 2",
+        "album al3 at 6", "album al9 at 9"))
+    }
+  }
+
+  test("per-page keep-first falls back to the window unless each page is read whole in one partition") {
+    val ex = SpotifyTransform.exploded(raw)
+    def analyzedNodes(df: DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.analyzed
+      (plan.collect { case w: Window => w }.size, plan.collect { case n: TopKPerKeyNode => n }.size)
+    }
+    // pages split across partitions
+    val split = ex.repartition(3)
+    dims(split, perPage = true).zip(dims(ex, perPage = true)).foreach { case (df, local) =>
+      assert(analyzedNodes(df) === ((1, 0)))
+      assert(rows(df) === rows(local))
+    }
+    withoutRewrite(dims(split, perPage = true).foreach { df =>
+      val (windows, _, locals, exchanges) = shape(df)
+      assert(windows > 0 && locals === 0 && exchanges > 0)
+    })
+    // a persisted scan: input_file_name() above the cache reads "" for
+    // every row, so the name no longer separates pages
+    val cachedRaw = spark.read.schema(Schemas.PlaylistSchema)
+      .option("multiLine", value = true).json(pagesDir).persist()
+    try dims(SpotifyTransform.exploded(cachedRaw), perPage = true).foreach { df =>
+      assert(analyzedNodes(df) === ((1, 0)))
+    } finally cachedRaw.unpersist()
+    // a persisted explode, as a pipeline run persists it, keeps the local pass
+    val persisted = SpotifyTransform.exploded(raw).persist()
+    try dims(persisted, perPage = true).zip(dims(ex, perPage = true)).foreach { case (df, local) =>
+      assert(shape(df)._3 === 1)
+      assert(rows(df) === rows(local))
+    } finally persisted.unpersist()
   }
 }

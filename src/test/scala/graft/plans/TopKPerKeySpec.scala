@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Custom physical operator pins: result ≡ the rank-window form, the plan
-  * carries the partial/final pair with an exchange between them, and the
-  * partial stage's bound holds across partitions.
+  * carries the partial/final pair with an exchange between them, the
+  * partial stage's bound holds across partitions, and concurrent installs
+  * of the strategy add it once.
   */
 class TopKPerKeySpec extends SparkSpec {
   import spark.implicits._
@@ -85,5 +86,21 @@ class TopKPerKeySpec extends SparkSpec {
       .filter(col("key") === "a")
       .collect().map(_.getLong(1)).toSet
     assert(top2 === Set(1L, 2L)) // equal scores → lowest ids win
+  }
+
+  test("threads racing to install the strategy add it exactly once") {
+    val session = spark.newSession()
+    def installed = session.experimental.extraStrategies.count(_.isInstanceOf[TopKPerKeyStrategy])
+    assert(installed === 0)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val installs = (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = { go.await(); (1 to 100).foreach(_ => TopKPerKey.install(session)) }
+      }))
+      go.countDown()
+      installs.foreach(_.get())
+    } finally pool.shutdown()
+    assert(installed === 1)
   }
 }
